@@ -1124,10 +1124,19 @@ object ClickHouseSql {
     }
   }
 
-  /** Run ClickHouse-dialect SQL text on any session (no extension
-    * needed): rewrite, then hand Spark's parser standard SQL.
+  /** A function name [[ClickHouseDialect.register]] adds: a session
+    * without it has not had the dialect's functions registered.
     */
-  def sql(spark: SparkSession, sqlText: String): DataFrame =
+  private val dialectSentinel = FunctionIdentifier("uniqExact")
+
+  /** Run ClickHouse-dialect SQL text on any session (no extension
+    * needed): register the dialect's function names on the session when
+    * the sentinel is missing (so a repeat call costs one registry
+    * lookup), rewrite, then hand Spark's parser standard SQL.
+    */
+  def sql(spark: SparkSession, sqlText: String): DataFrame = {
+    if (!spark.sessionState.functionRegistry.functionExists(dialectSentinel))
+      ClickHouseDialect.register(spark)
     optimizeTable(spark, sqlText)
       .orElse(showCreateTable(spark, sqlText))
       .orElse(describeTable(spark, sqlText))
@@ -1176,6 +1185,7 @@ object ClickHouseSql {
           .getOrElse(sysText)
         spark.sql(rewrite(effective, t => spark.table(t).columns.toSeq))
       }
+  }
 
   /** `SHOW CREATE TABLE t` — reconstruct the ClickHouse-dialect DDL
     * from the live declared schema + the registries (engine, sort key,

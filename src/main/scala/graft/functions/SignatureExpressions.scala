@@ -338,7 +338,12 @@ object SignatureKernels {
     * pass over the document bytes with no shingle-string, char-array,
     * or lambda-fold materialization per position. Multi-byte input
     * folds the Unicode code point, exactly as ascii() does on the
-    * single-character strings split('') produces.
+    * single-character strings split('') produces. A byte that cannot
+    * lead a UTF-8 character is one character folding U+FFFD, never a
+    * 4-byte step over its neighbours. (lower() on non-ASCII text
+    * re-encodes it through java.lang.String, replacing malformed bytes
+    * with U+FFFD, so that guard keeps the byte walk in step rather than
+    * changing a result; KernelPropertySpec pins parity on such input.)
     */
   def shingleCharFolds(s: UTF8String, w: Int): ArrayData = {
     val bytes = s.toLowerCase.getBytes
@@ -363,9 +368,12 @@ object SignatureKernels {
           var cp = x
           var len = 1
           if (x >= 0x80) {
-            if ((x & 0xe0) == 0xc0) { cp = x & 0x1f; len = 2 }
+            if (x >= 0xc2 && x <= 0xdf) { cp = x & 0x1f; len = 2 }
             else if ((x & 0xf0) == 0xe0) { cp = x & 0x0f; len = 3 }
-            else { cp = x & 0x07; len = 4 }
+            else if (x >= 0xf0 && x <= 0xf4) { cp = x & 0x07; len = 4 }
+            // not a UTF-8 lead byte: one character, as split('') takes
+            // it, which ascii() reads as U+FFFD
+            else cp = 0xfffd
             var k = 1
             while (k < len && b + k < until) {
               cp = (cp << 6) | (bytes(b + k) & 0x3f)

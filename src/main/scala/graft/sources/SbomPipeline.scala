@@ -4,8 +4,9 @@ import java.nio.charset.StandardCharsets
 
 import scala.collection.mutable.ListBuffer
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.sbom.{Sanitize, Sbom}
 
@@ -22,8 +23,11 @@ import graft.sbom.{Sanitize, Sbom}
   * document-artifact write, and the cleanup/trap + log surface
   * (lib/common.sh) the composable functions did not carry. Documents are
   * artifacts, not datasets — the driver-side JSON handling here touches
-  * one document per run, exactly like the reference's jq calls; the
-  * component relations stay distributed.
+  * one document per run, exactly like the reference's jq calls. The
+  * component rows are bounded the same way: a run inserts the components
+  * of the one artifact it wrote from an in-memory string, so they are
+  * collected once (the count comes from that collect) and written from
+  * the local copy instead of re-scanning the artifact.
   */
 object SbomPipeline {
 
@@ -64,14 +68,16 @@ object SbomPipeline {
 
   private def fail(msg: String): Nothing = throw new IllegalArgumentException(msg)
 
-  /** sanitize_inputs (lib/sanitize.sh via entrypoint.sh:426) — one tiny
-    * local relation evaluates every Column-typed sanitizer over the
-    * config strings; invalid values come back null and fail validation
-    * loudly rather than flowing onward.
+  /** sanitize_inputs (lib/sanitize.sh via entrypoint.sh:426) — a
+    * one-row local relation evaluates every Column-typed sanitizer over
+    * the config strings; the optimizer folds the projection into the
+    * relation, so no Spark job runs. Invalid values come back null and
+    * fail validation loudly rather than flowing onward.
     */
   private def sanitized(spark: SparkSession, cfg: Config): Config = {
     def lit0(v: Option[String]): Column = lit(v.orNull).cast("string")
-    val row = spark.range(1).select(
+    val oneRow = spark.createDataFrame(java.util.List.of(Row.empty), StructType(Nil))
+    val row = oneRow.select(
       Sanitize.sanitizeRepository(lit0(cfg.repository)).as("repository"),
       Sanitize.sanitizeS3Key(lit(cfg.s3Key)).as("s3_key"),
       Sanitize.sanitizeUuid(lit0(cfg.mendProjectUuid)).as("mend_project"),
@@ -286,14 +292,15 @@ object SbomPipeline {
         throw new IllegalStateException(s"Failed to download SBOM ($stage): $detail")
     }
     // unwrap → land the extracted document for the Spark readers
+    val doc = unwrap(fetched)
     val extracted = tempDir.resolve("extracted_sbom.json")
-    java.nio.file.Files.writeString(extracted, unwrap(fetched))
+    java.nio.file.Files.writeString(extracted, doc)
     val extractedPath = extracted.toUri.toString
     val detected = SbomSources.detectFormat(spark, extractedPath)
       .head.getAs[String]("format")
     log += s"Detected SBOM format: $detected"
     val processed = (detected, cfg.desiredFormat) match {
-      case ("cyclonedx", "cyclonedx") => unwrap(fetched)
+      case ("cyclonedx", "cyclonedx") => doc
       case ("cyclonedx", "spdxjson") =>
         SbomSources.convertCycloneDxToSpdx(
           SbomSources.readCycloneDx(spark, extractedPath)).head.getAs[String]("spdx_json")
@@ -317,6 +324,9 @@ object SbomPipeline {
   /** ClickHouse operations (entrypoint.sh:466-576): derive the table
     * name, set up / migrate / truncate, insert the flattened components.
     * Skipped entirely when `tableRoot` is unset, like CLICKHOUSE_URL.
+    * The artifact is one document this run wrote from an in-memory
+    * string, so its flattened, license-mapped rows are collected once:
+    * the count is the collect's length and the insert writes those rows.
     */
   private def tableOps(spark: SparkSession, cfg: Config, artifact: String,
     format: String, log: ListBuffer[String]): (Option[String], Option[String], Long) =
@@ -326,15 +336,17 @@ object SbomPipeline {
         val name = tableNameFor(cfg)
         log += s"Starting ClickHouse operations for table: $name"
         val comps = componentsOf(spark, artifact, format, cfg)
-        val n = comps.count()
+        val rows = comps.collect()
+        val n = rows.length.toLong
         if (n == 0) {
           // "No component data found in SBOM" — the reference warns and
           // returns without touching the table (entrypoint.sh:394-397)
           log += "No component data found in SBOM"
           (Some(name), None, 0L)
         } else {
+          val local = spark.createDataFrame(java.util.Arrays.asList(rows: _*), comps.schema)
           val decision = SbomSources.setupAndInsert(spark,
-            SbomSources.withInsertedAt(comps),
+            SbomSources.withInsertedAt(local),
             new org.apache.hadoop.fs.Path(root, name).toString, cfg.truncateTable)
           log += s"Inserted $n components into table $name ($decision)"
           (Some(name), Some(decision), n)

@@ -172,34 +172,43 @@ object SbomSources {
         col("doc_source").as("source"),
         lit(null).cast(StringType).as("purl"))
 
-  /** SWID probe schema: presence of the SoftwareIdentity object is the
-    * reference's "basic check" (sbom-processing.sh:83-87).
+  /** The fields the CycloneDX check reads: `bomFormat` and
+    * `metadata.component`, typed as in [[cycloneDxSchema]].
     */
-  private val swidProbeSchema = StructType(Seq(
+  private val cycloneDxProbe: StructType = StructType(Seq(
+    cycloneDxSchema("bomFormat"),
+    StructField("metadata", StructType(Seq(
+      cycloneDxSchema("metadata").dataType.asInstanceOf[StructType]("component"))))))
+
+  /** One probe schema for all three checks: the CycloneDX fields, also
+    * under the `.sbom` envelope; SPDX's `spdxVersion`/`SPDXID`; and the
+    * SoftwareIdentity object whose presence is the reference's SWID
+    * "basic check" (sbom-processing.sh:83-87). A field whose JSON type
+    * does not match reads as null without nulling its neighbours
+    * (spark.sql.json.enablePartialResults, on by default), so each check
+    * sees what its own scan would.
+    */
+  private val detectProbeSchema: StructType = StructType(cycloneDxProbe.fields ++ Seq(
+    StructField("sbom", cycloneDxProbe),
+    spdxSchema("spdxVersion"), spdxSchema("SPDXID"),
     StructField("SoftwareIdentity", StructType(Seq(
       StructField("name", StringType), StructField("tagId", StringType))))))
 
-  /** Detect document format from real field presence —
-    * sbom-processing.sh:58-91 priority order: cyclonedx → spdxjson →
-    * swid → spdxjson default.
+  /** Detect document format from real field presence in one JSON scan —
+    * sbom-processing.sh:58-91 priority order: cyclonedx (read through the
+    * `.sbom` envelope, like [[readCycloneDx]]) → spdxjson → swid →
+    * spdxjson default. Returns one (file, format) row per document; a
+    * corrupt file reads as all-null and takes the default.
     */
   def detectFormat(spark: SparkSession, path: String): DataFrame = {
-    val cdx = readCycloneDx(spark, path)
-      .select(col("_file"),
-        (col("bomFormat") === "CycloneDX" || col("metadata.component").isNotNull).as("is_cdx"))
-    val spdx = readSpdx(spark, path)
-      .select(col("_file").as("_file2"),
-        (col("spdxVersion").isNotNull || col("SPDXID").isNotNull).as("is_spdx"))
-    val swid = spark.read.schema(swidProbeSchema)
-      .option("multiLine", true).json(path)
-      .withColumn("_file3", input_file_name())
-      .select(col("_file3"), col("SoftwareIdentity").isNotNull.as("is_swid"))
-    cdx.join(spdx, col("_file") === col("_file2"))
-      .join(swid, col("_file") === col("_file3"))
-      .select(col("_file").as("file"),
-        when(col("is_cdx"), "cyclonedx")
-          .when(col("is_spdx"), "spdxjson")
-          .when(col("is_swid"), "swid")
+    def cdx(field: String): Column =
+      when(col("sbom").isNotNull, col(s"sbom.$field")).otherwise(col(field))
+    spark.read.schema(detectProbeSchema).option("multiLine", true).json(path)
+      .select(input_file_name().as("file"),
+        when(cdx("bomFormat") === "CycloneDX" || cdx("metadata.component").isNotNull,
+          "cyclonedx")
+          .when(col("spdxVersion").isNotNull || col("SPDXID").isNotNull, "spdxjson")
+          .when(col("SoftwareIdentity").isNotNull, "swid")
           .otherwise("spdxjson").as("format"))
   }
 

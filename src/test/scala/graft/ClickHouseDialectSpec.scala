@@ -26,6 +26,15 @@ class ClickHouseDialectSpec extends SparkSpec {
         .stripPrefix("file:"), name))
   }
 
+  test("ClickHouseSql.sql registers the dialect's functions on a fresh session") {
+    val fresh = spark.newSession()
+    val r = graft.functions.ClickHouseSql.sql(fresh,
+      "SELECT uniqExact(x) AS u, countIf(x > 1) AS c FROM VALUES (1), (2), (2) AS t(x)").head()
+    assert((r.getLong(0), r.getLong(1)) === ((2L, 2L)))
+    assert(ClickHouseDialect.names.forall(n => fresh.sessionState.functionRegistry
+      .functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier(n))))
+  }
+
   test("countIf/sumIf/argMax/quantileExact from SQL text") {
     val r = spark.sql("""
       SELECT countIf(o_orderstatus = 'F') AS nf,

@@ -371,4 +371,44 @@ class KernelPropertySpec extends AnyFunSuite {
       }
     }
   }
+
+  test("shingleCharFolds == the split('')/ascii chain on invalid UTF-8") {
+    import org.apache.spark.sql.catalyst.expressions.{Ascii, Literal, Lower, StringSplit, StringTrim}
+    import org.apache.spark.sql.catalyst.util.ArrayData
+    import org.apache.spark.sql.types.StringType
+    val P = graft.functions.PortableHash.P
+    def str(s: UTF8String) = Literal(s, StringType)
+    def strings(a: Any): Seq[UTF8String] = {
+      val arr = a.asInstanceOf[ArrayData]
+      (0 until arr.numElements()).map(arr.getUTF8String)
+    }
+    // Spark's own lower/trim/split/ascii evaluate the chain; only the
+    // slice/array_join/aggregate glue is restated
+    def chain(text: UTF8String, w: Int): Seq[Long] = {
+      val ws = strings(StringSplit(StringTrim(Lower(str(text))), Literal("\\s+"), Literal(-1))
+        .eval()).filter(_.numBytes > 0)
+      (0 until math.max(ws.length - w + 1, 1)).map { i =>
+        val sh = UTF8String.concatWs(UTF8String.fromString(" "), ws.slice(i, i + w): _*)
+        strings(StringSplit(str(sh), Literal(""), Literal(-1)).eval()).foldLeft(7L) {
+          (acc, c) => (acc * 31 + Ascii(str(c)).eval().asInstanceOf[Int]) % P
+        }
+      }
+    }
+    def bytes(bs: Int*): Gen[Array[Byte]] = Gen.const(bs.map(_.toByte).toArray)
+    val valid = Gen.oneOf(
+      Gen.alphaChar.map(c => Array(c.toByte)), bytes(' '), bytes(' ', ' '),
+      Gen.oneOf("é", "€", "😀").map(_.getBytes("UTF-8")))
+    val invalid = Gen.oneOf(
+      Gen.choose(0x80, 0xbf).flatMap(b => bytes(b)), // stray continuation byte
+      Gen.oneOf(0xc0, 0xc1, 0xf5, 0xf8, 0xfe, 0xff).flatMap(b => bytes(b)), // never a lead
+      Gen.choose(0xc2, 0xf4).flatMap(b => bytes(b, 'a'))) // truncated sequence
+    val text = for {
+      pre <- Gen.listOf(valid)
+      bad <- Gen.nonEmptyListOf(Gen.zip(invalid, Gen.listOf(valid)))
+    } yield UTF8String.fromBytes((pre ++ bad.flatMap { case (b, v) => b +: v }).flatten.toArray)
+    forSamples(text, 300) { t =>
+      val got = SignatureKernels.shingleCharFolds(t, 3).toLongArray.toSeq
+      assert(got === chain(t, 3), t.getBytes.map(b => f"${b & 0xff}%02x").mkString(" "))
+    }
+  }
 }

@@ -3,6 +3,8 @@ package graft
 import java.nio.file.{Files, Paths}
 
 import graft.sources.{Fetcher, SbomPipeline, SbomSources}
+import org.apache.spark.graft.ListenerBusAccess
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
 /** End-to-end replay of the reference's main() contract
@@ -80,6 +82,51 @@ class SbomPipelineSpec extends SparkSpec {
     Files.writeString(Paths.get(d, "license-mappings.json"),
       """{"mystery": "MIT-0"}""")
     s"$d/license-mappings.json"
+  }
+
+  /** Spark jobs `f` starts, counted by a listener. Only jobs of a job
+    * group set for `f` count, so work elsewhere in the JVM does not.
+    */
+  private def jobsOf(f: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"sbom-job-budget-${java.util.UUID.randomUUID()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "SbomPipelineSpec job budget")
+    try f
+    finally {
+      sc.clearJobGroup()
+      ListenerBusAccess.waitUntilEmpty(sc, 10000L)
+      sc.removeSparkListener(listener)
+    }
+    jobs.get
+  }
+
+  test("job budget: sanitizing fires no job; one insert scans and writes once") {
+    val (bucket, tables) = freshDirs()
+    // the repository sanitizes to null and validation stops the run, so
+    // only sanitizing ran
+    assert(jobsOf(intercept[IllegalArgumentException] {
+      SbomPipeline.run(spark, SbomPipeline.Config(source = "github",
+        repository = Some("not a repo!"), bucketDir = bucket), None, sleep = _ => ())
+    }) === 0)
+    // detect (1 scan), collect the mapped components (the mapping's
+    // broadcast + the artifact scan), write (shuffle + write)
+    var res: SbomPipeline.Result = null
+    val jobs = jobsOf {
+      res = SbomPipeline.run(spark, SbomPipeline.Config(
+        source = "github", repository = Some("acme/budget"), bucketDir = bucket,
+        tableRoot = Some(tables), licenseMappings = Some(mappings)),
+        Some(stubGithub(cdxDoc)), sleep = _ => ())
+    }
+    assert(res.detectedFormat === Some("cyclonedx"))
+    assert(res.tableDecision === Some("created") && res.componentCount === 2)
+    assert(jobs <= 5, s"$jobs Spark jobs for one insert")
   }
 
   test("normal mode github: wrapped SPDX → unwrap → detect → convert → artifact + table") {

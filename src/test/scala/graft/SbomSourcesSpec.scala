@@ -133,6 +133,24 @@ class SbomSourcesSpec extends SparkSpec {
     assert(formats("repo.json") === "spdxjson")
   }
 
+  test("one-scan detection: a type-mismatched field nulls only itself") {
+    // each file is named after the format it must be detected as
+    val d = Files.createTempDirectory("graft_detect_mismatch").toString
+    val docs = Seq(
+      "swid-1.json" -> """{"SoftwareIdentity": {"name": "a", "tagId": "t"}, "metadata": 5}""",
+      "spdxjson-2.json" ->
+        """{"spdxVersion": "SPDX-2.3", "metadata": {"component": "str"}, "bomFormat": ["x"]}""",
+      "cyclonedx-3.json" ->
+        """{"bomFormat": "CycloneDX", "spdxVersion": {"a": 1}, "SoftwareIdentity": "nope"}""",
+      "spdxjson-4.json" -> """{"SoftwareIdentity": {"name": "a"}, "spdxVersion": {"x": [1]}}""",
+      "cyclonedx-5.json" -> s"""{"sbom": $cdxDoc2}""")
+    docs.foreach { case (f, json) => Files.writeString(Paths.get(d, f), json) }
+    val formats = SbomSources.detectFormat(spark, d).collect()
+      .map(r => (r.getString(0).split("/").last, r.getString(1))).toMap
+    assert(formats.keySet === docs.map(_._1).toSet)
+    formats.foreach { case (f, fmt) => assert(fmt === f.takeWhile(_ != '-'), f) }
+  }
+
   test("source-ref strategies 4 and 5: top-level name, then tools-name hint with denylist") {
     val d = Files.createTempDirectory("graft_srcref").toString
     // strategy 4: no metadata names at all, but a top-level .name
