@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: times every registry query at SPARK_GRAFT_SF_DIR and
   * prints ONE compact JSON line. Queries run in deterministic sorted
@@ -381,15 +380,11 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // GraftSession defaults matter here: without AQE the iterative index
     // builds run every tiny shuffle at full static width (32 tasks of a
     // few hundred rows each), and the build phase is 2-3x slower at
     // local[32] than AQE-coalesced — measured, not theoretical.
-    val spark = GraftSession.configure(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus))
-      .getOrCreate()
+    val spark = GraftSession.local()
     spark.sparkContext.setLogLevel("ERROR")
     val jiffies0 = cpuJiffies()
     // Host calibration BEFORE any Spark work contends for cores: the
@@ -397,7 +392,7 @@ object Bench {
     // then the fixed I/O sweep (first-touch + warm) over the SF dir —
     // ordered CPU-first so the spin never measures a page-cache fill.
     val calib1t = calibSpin(1)
-    val calib32t = calibSpin(cpus.toInt)
+    val calib32t = calibSpin(GraftSession.cpus)
     val (calibIoMbps, calibIoWarm) = ioSpin(sfDir)
     // Per-query I/O counters (r14 verdict's #1 ask): the process-wide
     // /proc/self/io deltas — rchar (logical read() bytes: parquet,
@@ -486,11 +481,9 @@ object Bench {
     // never filtered out from UNDER a selected query: a filtered query
     // that needs an unselected build simply pays it inside its first
     // rep, so builds stay selected whenever any query is.
-    val builds =
-      (graft.dedup.Dedup.buildSteps(t) ++ graft.ann.Ann.buildSteps(t) ++
-        graft.text.TextOps.buildSteps(t))
-        .filter { case (name, _) => selected(s"_build_$name") }
-        .map { case (name, run) => timed(s"_build_$name")(run()) }
+    val builds = SparkEntry.builds(t)
+      .filter { case (name, _) => selected(s"_build_$name") }
+      .map { case (name, run) => timed(s"_build_$name")(run()) }
     // Settling pause: let the build phase's GC debt and JIT compilation
     // drain before any query is timed — round 4 showed the first queries
     // after the builds absorbing 10x phantom costs on untouched code.

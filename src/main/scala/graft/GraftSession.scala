@@ -11,7 +11,13 @@ import org.apache.spark.sql.SparkSession
   * tolerance, and the graft native function surface.
   */
 object GraftSession {
-  def local(cores: Int = 32): SparkSession = configure(
+  /** Local core count: `SPARK_GRAFT_CPUS`, default 32. */
+  def cpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+
+  /** The session Bench, Verify and the dev tool run on: `local[cores]`
+    * with one shuffle partition per core and the graft defaults.
+    */
+  def local(cores: Int = cpus): SparkSession = configure(
     SparkSession.builder()
       .master(s"local[$cores]")
       .config("spark.sql.shuffle.partitions", cores)).getOrCreate()

@@ -54,8 +54,8 @@ object SparkEntry {
     * keep their orderBy: specs assert on ordered collect()s and users
     * exploring interactively still get stable output; only the driver
     * surface (Bench/Verify — and any service that serves the registry
-    * through SparkEntry.queries) runs the unsorted plan.
-    * GRAFT_KEEP_FINAL_SORT=1 restores the sorted plans for debugging.
+    * through SparkEntry.queries) runs the unsorted plan; the sorted one
+    * stays available from `registry`'s `build`.
     */
   private def stripFinalSort(df: DataFrame): DataFrame =
     df.queryExecution.logical match {
@@ -65,14 +65,32 @@ object SparkEntry {
     }
 
   /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = {
-    val keepSort = sys.env.get("GRAFT_KEEP_FINAL_SORT").contains("1")
+  def queries: Map[String, (SparkSession, String) => DataFrame] =
     registry.map { q =>
-      q.name -> ((s: SparkSession, dir: String) => {
-        val df = q.build(Tables(s, dir))
-        if (keepSort) df else stripFinalSort(df)
-      })
+      q.name -> ((s: SparkSession, dir: String) => stripFinalSort(q.build(Tables(s, dir))))
     }.toMap
+
+  /** Every index build step (Bench's `_build_*` entries) in dependency
+    * order: Dedup, then Ann, then TextOps. Names are unique across the
+    * three, or this fails.
+    */
+  def builds(t: Tables): Seq[(String, () => Unit)] = {
+    val steps = graft.dedup.Dedup.buildSteps(t) ++ graft.ann.Ann.buildSteps(t) ++
+      graft.text.TextOps.buildSteps(t)
+    val names = steps.map(_._1)
+    val dups = names.diff(names.distinct).distinct
+    require(dups.isEmpty, s"duplicate build step names: ${dups.mkString(", ")}")
+    steps
+  }
+
+  /** The build step called `name`; an unknown name fails with the list
+    * of valid ones.
+    */
+  def buildStep(t: Tables, name: String): () => Unit = {
+    val steps = builds(t)
+    steps.collectFirst { case (`name`, run) => run }.getOrElse(
+      throw new IllegalArgumentException(
+        s"unknown build step '$name'; valid: ${steps.map(_._1).mkString(", ")}"))
   }
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on

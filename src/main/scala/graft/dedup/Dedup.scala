@@ -2047,7 +2047,9 @@ object Dedup {
   // no struct comparisons. Fingerprint postings join df-capped (≤ 50,
   // the jaccardIndex rule), so the pair stage is linear in postings, and
   // every window is per-document — the whole op is embarrassingly
-  // document-parallel.
+  // document-parallel. A document with null text has no fingerprints:
+  // graft_shingle_charfold returns null for it, so posexplode drops the
+  // document and it never pairs (DedupSpec pins this).
   val winnow = Q(
     "dedup_winnow",
     Some {

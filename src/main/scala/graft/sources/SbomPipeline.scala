@@ -150,13 +150,16 @@ object SbomPipeline {
   }
 
   /** extract_sbom_from_wrapper (sbom-processing.sh:38-55): jq
-    * 'if has("sbom") then .sbom else .' on the one fetched document.
+    * 'if has("sbom") then .sbom else .' on the one fetched document;
+    * also whether what it returns is one JSON object.
     */
-  private def unwrap(doc: String): String = {
+  private def unwrap(doc: String): (String, Boolean) = {
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
     val root = mapper.readTree(doc)
-    if (root != null && root.isObject && root.has("sbom")) root.get("sbom").toString
-    else doc
+    if (root != null && root.isObject && root.has("sbom")) {
+      val sbom = root.get("sbom")
+      (sbom.toString, sbom.isObject)
+    } else (doc, root != null && root.isObject)
   }
 
   /** Include/exclude filename-glob filtering, exclude wins
@@ -225,9 +228,34 @@ object SbomPipeline {
       case other => fail(s"Unsupported SBOM format for ClickHouse: $other")
     }
     cfg.licenseMappings match {
-      case Some(m) =>
-        SbomSources.mapUnknownLicenses(flat, SbomSources.readLicenseMappings(spark, m))
+      case Some(m) => SbomSources.mapUnknownLicenses(flat, licenseMappings(spark, m))
       case None => flat
+    }
+  }
+
+  /** Each mapping file's rows, kept per file version (length and
+    * modification time): every run of a deployment maps through the
+    * same file, so only the first reads it with Spark. A path that is
+    * not a plain file (a directory or a glob) is read on every run.
+    */
+  private val mappingFiles =
+    new java.util.concurrent.ConcurrentHashMap[String, ((Long, Long), Map[String, String])]()
+
+  private def licenseMappings(spark: SparkSession, path: String): Map[String, String] = {
+    def read(): Map[String, String] = SbomSources.readLicenseMappings(spark, path).collect()
+      .map(r => r.getString(0) -> r.getString(1)).toMap
+    val p = new org.apache.hadoop.fs.Path(path)
+    scala.util.Try(p.getFileSystem(spark.sessionState.newHadoopConf()).getFileStatus(p))
+      .toOption.filter(_.isFile) match {
+      case None => read()
+      case Some(st) =>
+        val version = (st.getLen, st.getModificationTime)
+        val key = st.getPath.toString
+        Option(mappingFiles.get(key)).collect { case (`version`, m) => m }.getOrElse {
+          val m = read()
+          mappingFiles.put(key, (version, m))
+          m
+        }
     }
   }
 
@@ -292,12 +320,15 @@ object SbomPipeline {
         throw new IllegalStateException(s"Failed to download SBOM ($stage): $detail")
     }
     // unwrap → land the extracted document for the Spark readers
-    val doc = unwrap(fetched)
+    val (doc, isObject) = unwrap(fetched)
     val extracted = tempDir.resolve("extracted_sbom.json")
     java.nio.file.Files.writeString(extracted, doc)
     val extractedPath = extracted.toUri.toString
-    val detected = SbomSources.detectFormat(spark, extractedPath)
-      .head.getAs[String]("format")
+    // one JSON object is detected from the string without a scan; anything
+    // else (an array of documents) by the reader over the landed file
+    val detected =
+      if (isObject) SbomSources.detectFormatOf(spark, doc)
+      else SbomSources.detectFormat(spark, extractedPath).head.getAs[String]("format")
     log += s"Detected SBOM format: $detected"
     val processed = (detected, cfg.desiredFormat) match {
       case ("cyclonedx", "cyclonedx") => doc

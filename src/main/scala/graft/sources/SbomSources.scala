@@ -200,16 +200,28 @@ object SbomSources {
     * spdxjson default. Returns one (file, format) row per document; a
     * corrupt file reads as all-null and takes the default.
     */
-  def detectFormat(spark: SparkSession, path: String): DataFrame = {
-    def cdx(field: String): Column =
-      when(col("sbom").isNotNull, col(s"sbom.$field")).otherwise(col(field))
+  def detectFormat(spark: SparkSession, path: String): DataFrame =
     spark.read.schema(detectProbeSchema).option("multiLine", true).json(path)
-      .select(input_file_name().as("file"),
-        when(cdx("bomFormat") === "CycloneDX" || cdx("metadata.component").isNotNull,
-          "cyclonedx")
-          .when(col("spdxVersion").isNotNull || col("SPDXID").isNotNull, "spdxjson")
-          .when(col("SoftwareIdentity").isNotNull, "swid")
-          .otherwise("spdxjson").as("format"))
+      .select(input_file_name().as("file"), formatOf(col).as("format"))
+
+  /** [[detectFormat]] of one JSON object held as a string: the same probe
+    * schema through `from_json` (the parser the JSON reader uses, with
+    * the same defaults) over a one-row local relation, which the
+    * optimizer folds, so no Spark job runs.
+    */
+  def detectFormatOf(spark: SparkSession, doc: String): String =
+    spark.createDataFrame(java.util.List.of(org.apache.spark.sql.Row.empty), StructType(Nil))
+      .select(from_json(lit(doc), detectProbeSchema).as("d"))
+      .select(formatOf(f => col(s"d.$f"))).head().getString(0)
+
+  /** The detection rule over the probe fields, `probe(name)` giving one. */
+  private def formatOf(probe: String => Column): Column = {
+    def cdx(field: String): Column =
+      when(probe("sbom").isNotNull, probe(s"sbom.$field")).otherwise(probe(field))
+    when(cdx("bomFormat") === "CycloneDX" || cdx("metadata.component").isNotNull, "cyclonedx")
+      .when(probe("spdxVersion").isNotNull || probe("SPDXID").isNotNull, "spdxjson")
+      .when(probe("SoftwareIdentity").isNotNull, "swid")
+      .otherwise("spdxjson")
   }
 
   /** fix_spdx_compatibility (sbom-processing.sh:7-35) as a document walk:
@@ -322,30 +334,52 @@ object SbomSources {
       .select(explode(from_json(col("value"), MapType(StringType, StringType)))
         .as(Seq("name", "mapped_license")))
 
+  /** The unknown-license rule (entrypoint.sh:245-269): an unknown, empty,
+    * "null" or missing license takes the `mapped` id, else stays 'unknown'.
+    */
+  private def mappedLicense(mapped: Column): Column =
+    when(col("license").isin("unknown", "", "null") || col("license").isNull,
+      coalesce(mapped, lit("unknown")))
+      .otherwise(col("license")).as("license")
+
   /** Apply the unknown-license mapping dim (entrypoint.sh:245-269). */
   def mapUnknownLicenses(components: DataFrame, mapping: DataFrame): DataFrame =
     components
       .join(broadcast(mapping.select(col("name").as("m_name"), col("mapped_license"))),
         col("name") === col("m_name"), "left")
-      .select(col("name"), col("version"),
-        when(col("license").isin("unknown", "", "null") || col("license").isNull,
-          coalesce(col("mapped_license"), lit("unknown")))
-          .otherwise(col("license")).as("license"),
+      .select(col("name"), col("version"), mappedLicense(col("mapped_license")),
         col("source"), col("purl"))
+
+  /** The same mapping with the mapping rows already collected: a lookup
+    * in one literal map instead of the broadcast join, so no Spark job
+    * builds a broadcast.
+    */
+  def mapUnknownLicenses(components: DataFrame, mapping: Map[String, String]): DataFrame =
+    components.select(col("name"), col("version"),
+      mappedLicense(typedLit(mapping).apply(col("name"))), col("source"), col("purl"))
 
   /** Sink: the ClickHouse MergeTree analog — parquet partitioned by the
     * low-cardinality source, sorted within partitions by the table's
     * ORDER BY (name, version, license) (entrypoint.sh:220-229), so scans
-    * prune by source and range-skip on name.
+    * prune by source and range-skip on name. The sort leads with `source`
+    * because the partitioned writer needs its rows grouped by it: a sort
+    * without it gets a writer sort on `source` alone on top, and the
+    * optimizer then drops the (name, version, license) sort beneath it.
     */
   def writeComponentTable(components: DataFrame, path: String,
     mode: String = "overwrite"): Unit =
     components
       .repartition(col("source"))
-      .sortWithinPartitions(col("name"), col("version"), col("license"))
+      .sortWithinPartitions(col("source"), col("name"), col("version"), col("license"))
       .write.mode(mode)
       .partitionBy("source")
       .parquet(path)
+
+  /** The `source=…` partition directories directly under a table root. */
+  private def sourcePartitions(fs: org.apache.hadoop.fs.FileSystem,
+    root: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.FileStatus] =
+    fs.listStatus(root).toSeq
+      .filter(s => s.isDirectory && s.getPath.getName.startsWith("source="))
 
   /** Background-merge analog (ClickHouse merges small parts into larger
     * ones to keep read amplification flat; an append-heavy parquet sink
@@ -364,8 +398,7 @@ object SbomSources {
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(conf)
     if (!fs.exists(root)) return Seq.empty
-    fs.listStatus(root).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("source="))
+    sourcePartitions(fs, root)
       .flatMap { part =>
         val dir = part.getPath
         val files = fs.listStatus(dir).toSeq
@@ -376,7 +409,7 @@ object SbomSources {
         else {
           val tmp = new org.apache.hadoop.fs.Path(dir.toString + "._compact_tmp")
           val old = new org.apache.hadoop.fs.Path(dir.toString + "._compact_old")
-          spark.read.parquet(dir.toString)
+          readParquet(spark, dir.toString)
             .coalesce(nOut)
             .sortWithinPartitions(col("name"), col("version"), col("license"))
             .write.mode("overwrite").parquet(tmp.toString)
@@ -412,9 +445,45 @@ object SbomSources {
     if (table.columns.contains("source")) table
     else table.withColumn("source", lit("unknown"))
 
+  /** `spark.read.parquet(path)` without its schema-inference job. Without
+    * `mergeSchema`, inference takes the Spark schema stored in the footer
+    * of the first data file in path order; this reads that footer itself,
+    * outside any Spark job, and hands the schema to the reader, which
+    * still discovers the partition columns from the directory names. Summary files, merged
+    * schemas, or a footer that cannot be read or holds no Spark schema
+    * fall back to inference.
+    */
+  private def readParquet(spark: SparkSession, path: String): DataFrame = {
+    import org.apache.hadoop.fs.{FileStatus, Path}
+    val conf = spark.sessionState.newHadoopConf()
+    val root = new Path(path)
+    val fs = root.getFileSystem(conf)
+    // the names Spark's file listing skips (HadoopFSUtils.shouldFilterOutPathName)
+    def summary(n: String) = n.startsWith("_common_metadata") || n.startsWith("_metadata")
+    def hidden(n: String) = !summary(n) &&
+      ((n.startsWith("_") && !n.contains("=")) || n.startsWith(".") || n.endsWith("._COPYING_"))
+    def leaves(s: FileStatus): Seq[FileStatus] =
+      if (!s.isDirectory) Seq(s)
+      else fs.listStatus(s.getPath).toSeq.filterNot(c => hidden(c.getPath.getName)).flatMap(leaves)
+    val files = if (fs.exists(root)) leaves(fs.getFileStatus(root)) else Nil
+    val footerSchema =
+      if (spark.conf.get("spark.sql.parquet.mergeSchema", "false").toBoolean ||
+        files.exists(f => summary(f.getPath.getName))) None
+      else files.minByOption(_.getPath.toString).flatMap { f =>
+        scala.util.Try {
+          val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+            org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(f, conf))
+          try DataType.fromJson(reader.getFooter.getFileMetaData.getKeyValueMetaData
+            .get("org.apache.spark.sql.parquet.row.metadata"))
+          finally reader.close()
+        }.toOption.collect { case s: StructType => s }
+      }
+    footerSchema.fold(spark.read.parquet(path))(s => spark.read.schema(s).parquet(path))
+  }
+
   /** Read a component table of either generation (pre- or post-source). */
   def readComponentTable(spark: SparkSession, path: String): DataFrame =
-    upgradeLegacySchema(spark.read.parquet(path))
+    upgradeLegacySchema(readParquet(spark, path))
 
   /** Physical migration — the ALTER TABLE … ADD COLUMN analog: rewrite a
     * legacy table into the current partitioned/sorted layout so future
@@ -424,13 +493,16 @@ object SbomSources {
     * migrate partition-by-partition; the full rewrite is the small-table
     * path the reference takes (its ALTER rewrites nothing, but ClickHouse
     * materializes the default lazily — the observable semantics match).
+    * A table with `source=…` partition directories has the column, which
+    * one directory listing decides; only a table without them pays the
+    * schema inference (a Spark job) to find out.
     */
   def migrateComponentTable(spark: SparkSession, path: String): Boolean = {
-    val existing = spark.read.parquet(path)
-    if (existing.columns.contains("source")) false
+    val hadoopPath = new org.apache.hadoop.fs.Path(path)
+    val fs = hadoopPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    lazy val existing = readParquet(spark, path)
+    if (sourcePartitions(fs, hadoopPath).nonEmpty || existing.columns.contains("source")) false
     else {
-      val hadoopPath = new org.apache.hadoop.fs.Path(path)
-      val fs = hadoopPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
       val tmp = new org.apache.hadoop.fs.Path(path + "__migrating")
       val trash = new org.apache.hadoop.fs.Path(path + "__pre_migration")
       // leftovers from a crashed/concurrent run would make the renames

@@ -365,8 +365,9 @@ class DedupSpec extends SparkSpec {
     // bit-for-bit on every edge the expression chain has: empty and
     // whitespace-only docs (split('','') = ['']), 1- and 2-token docs
     // (short slices), mixed case, padded whitespace, multi-byte
-    // characters (ascii() = code point), and the limit=-1 trailing
-    // empty split('') element
+    // characters (ascii() = code point). split(sh, '') yields exactly
+    // the characters, with no trailing empty element, and the kernel
+    // adds no fold step for one
     graft.functions.GraftFunctions.register(spark)
     import spark.implicits._
     val docs = Seq(
@@ -388,5 +389,12 @@ class DedupSpec extends SparkSpec {
     rows.foreach { r =>
       assert(r.getSeq[Long](0) === r.getSeq[Long](1))
     }
+    // null text: the kernel returns null (where the chain it replaced
+    // folded one null hash), so posexplode drops the document and
+    // dedup_winnow never fingerprints it
+    val nullDoc = Seq(Option.empty[String]).toDF("text")
+      .select(expr("graft_shingle_charfold(text)").as("hs"))
+    assert(nullDoc.collect().map(_.isNullAt(0)).toSeq === Seq(true))
+    assert(nullDoc.select(posexplode(col("hs"))).count() === 0L)
   }
 }

@@ -770,4 +770,22 @@ class PlanShapeSpec extends SparkSpec {
     assert(sorts.nonEmpty, "sort under LIMIT must keep its ordering role")
     assert(!topk.queryExecution.logical.isInstanceOf[Sort])
   }
+
+  test("idf_bands runs its tokenize pipeline once: the second consumer reuses the exchange") {
+    // tokc feeds both the df count and the weight join; the final AQE
+    // plan must read the second copy from a ReusedExchange. Without
+    // reuse the whole tokenize+explode subtree runs twice per build —
+    // Dedup.idfBanded's `cnt > 0` keeps the two subtrees canonically
+    // equal, and this pins that an optimizer change cannot undo it
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+    val sigs = graft.dedup.Dedup.idfBanded(sf0001)
+    sigs.count()
+    val plan = sigs.queryExecution.withCachedData
+      .collectFirst { case r: InMemoryRelation => r.cachedPlan }
+      .getOrElse(fail("idf-bands frame is not cached"))
+    val reused = new AdaptiveSparkPlanHelper {}.collect(plan) { case r: ReusedExchangeExec => r }
+    assert(reused.nonEmpty, plan.toString)
+  }
 }

@@ -3,8 +3,6 @@ package graft
 import java.nio.file.{Files, Paths}
 
 import graft.sources.{Fetcher, SbomPipeline, SbomSources}
-import org.apache.spark.graft.ListenerBusAccess
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
 /** End-to-end replay of the reference's main() contract
@@ -84,29 +82,6 @@ class SbomPipelineSpec extends SparkSpec {
     s"$d/license-mappings.json"
   }
 
-  /** Spark jobs `f` starts, counted by a listener. Only jobs of a job
-    * group set for `f` count, so work elsewhere in the JVM does not.
-    */
-  private def jobsOf(f: => Unit): Int = {
-    val sc = spark.sparkContext
-    val group = s"sbom-job-budget-${java.util.UUID.randomUUID()}"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          jobs.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, "SbomPipelineSpec job budget")
-    try f
-    finally {
-      sc.clearJobGroup()
-      ListenerBusAccess.waitUntilEmpty(sc, 10000L)
-      sc.removeSparkListener(listener)
-    }
-    jobs.get
-  }
-
   test("job budget: sanitizing fires no job; one insert scans and writes once") {
     val (bucket, tables) = freshDirs()
     // the repository sanitizes to null and validation stops the run, so
@@ -115,8 +90,10 @@ class SbomPipelineSpec extends SparkSpec {
       SbomPipeline.run(spark, SbomPipeline.Config(source = "github",
         repository = Some("not a repo!"), bucketDir = bucket), None, sleep = _ => ())
     }) === 0)
-    // detect (1 scan), collect the mapped components (the mapping's
-    // broadcast + the artifact scan), write (shuffle + write)
+    // detect (none: one JSON object is probed from the string), collect
+    // the mapped components (the mapping file's read, unless an earlier
+    // run read this version of it, + the artifact scan), write (shuffle +
+    // write)
     var res: SbomPipeline.Result = null
     val jobs = jobsOf {
       res = SbomPipeline.run(spark, SbomPipeline.Config(
@@ -126,7 +103,41 @@ class SbomPipelineSpec extends SparkSpec {
     }
     assert(res.detectedFormat === Some("cyclonedx"))
     assert(res.tableDecision === Some("created") && res.componentCount === 2)
-    assert(jobs <= 5, s"$jobs Spark jobs for one insert")
+    assert(jobs <= 4, s"$jobs Spark jobs for one insert")
+  }
+
+  test("job budget: an append into an existing table fires no schema-inference job") {
+    val (bucket, tables) = freshDirs()
+    val cfg = SbomPipeline.Config(
+      source = "github", repository = Some("acme/budget"), bucketDir = bucket,
+      tableRoot = Some(tables), licenseMappings = Some(mappings))
+    assert(SbomPipeline.run(spark, cfg, Some(stubGithub(cdxDoc)), sleep = _ => ())
+      .tableDecision === Some("created"))
+    // the table's source= partitions show it needs no migration, and the
+    // mapping file is the one the first run read: the artifact scan and
+    // the write are all that is left
+    var res: SbomPipeline.Result = null
+    val jobs = jobsOf {
+      res = SbomPipeline.run(spark, cfg, Some(stubGithub(cdxDoc2)), sleep = _ => ())
+    }
+    assert(res.tableDecision === Some("appended") && res.componentCount === 2)
+    assert(jobs <= 3, s"$jobs Spark jobs for an append")
+  }
+
+  test("a rewritten license-mappings file is read again") {
+    val (bucket, tables) = freshDirs()
+    val file = Files.createTempDirectory("graft_pipe_remap").resolve("license-mappings.json")
+    def mysteryLicense(mapping: String, repo: String): String = {
+      Files.writeString(file, mapping)
+      SbomPipeline.run(spark, SbomPipeline.Config(
+        source = "github", repository = Some(repo), bucketDir = bucket,
+        tableRoot = Some(tables), licenseMappings = Some(file.toString)),
+        Some(stubGithub(cdxDoc)), sleep = _ => ())
+      SbomSources.readComponentTable(spark, s"$tables/${repo.replace('/', '_')}")
+        .filter(col("name") === "mystery").head().getAs[String]("license")
+    }
+    assert(mysteryLicense("""{"mystery": "MIT-0"}""", "acme/one") === "MIT-0")
+    assert(mysteryLicense("""{"mystery": "Zlib", "other": "ISC"}""", "acme/two") === "Zlib")
   }
 
   test("normal mode github: wrapped SPDX → unwrap → detect → convert → artifact + table") {

@@ -149,6 +149,15 @@ class SbomSourcesSpec extends SparkSpec {
       .map(r => (r.getString(0).split("/").last, r.getString(1))).toMap
     assert(formats.keySet === docs.map(_._1).toSet)
     formats.foreach { case (f, fmt) => assert(fmt === f.takeWhile(_ != '-'), f) }
+    // the string form decides every fixture the same way, without a job
+    docs.foreach { case (f, json) =>
+      var fmt: String = null
+      assert(jobsOf { fmt = SbomSources.detectFormatOf(spark, json) } === 0, f)
+      assert(fmt === f.takeWhile(_ != '-'), f)
+    }
+    assert(SbomSources.detectFormatOf(spark, cdxDoc) === "cyclonedx")
+    assert(SbomSources.detectFormatOf(spark, spdxDoc) === "spdxjson")
+    assert(SbomSources.detectFormatOf(spark, "{not json at all!!") === "spdxjson")
   }
 
   test("source-ref strategies 4 and 5: top-level name, then tools-name hint with denylist") {
@@ -260,6 +269,9 @@ class SbomSourcesSpec extends SparkSpec {
     val mapped = SbomSources.mapUnknownLicenses(merged, mapping)
     assert(mapped.filter(col("name") === "mystery").head().getAs[String]("license") === "MIT")
     assert(mapped.filter(col("name") === "libbaz").head().getAs[String]("license") === "BSD-3-Clause")
+    // the literal-map form maps the same rows
+    assert(SbomSources.mapUnknownLicenses(merged, Map("mystery" -> "MIT")).collect().toSet ===
+      mapped.collect().toSet)
 
     val out = Files.createTempDirectory("graft_comp_table").toString
     SbomSources.writeComponentTable(mapped, out)
@@ -354,6 +366,42 @@ class SbomSourcesSpec extends SparkSpec {
     val both = spark.read.parquet(legacy)
     assert(both.count() === 2)
     assert(both.select("source").distinct().collect().map(_.getString(0)).toSet === Set("unknown", "d"))
+  }
+
+  test("component table files keep the table ORDER BY within each source partition") {
+    import spark.implicits._
+    val rows = for (src <- Seq("a", "b", "c"); n <- Seq("zeta", "alpha", "mu", "beta");
+      v <- Seq("2.0", "1.0")) yield (n, v, if (n == "mu") null else "MIT", src, null: String)
+    val path = Files.createTempDirectory("graft_sorted").toString + "/table"
+    SbomSources.writeComponentTable(
+      scala.util.Random.shuffle(rows).toDF("name", "version", "license", "source", "purl"), path)
+    val files = Files.walk(Paths.get(path)).toArray.map(_.toString)
+      .filter(f => f.endsWith(".parquet") && !f.contains("/."))
+    assert(files.nonEmpty)
+    files.foreach { f =>
+      val keys = spark.read.parquet(f).collect()
+        .map(r => (r.getAs[String]("name"), r.getAs[String]("version"),
+          Option(r.getAs[String]("license")).getOrElse("")))
+        .toSeq
+      assert(keys === keys.sorted, f)
+    }
+  }
+
+  test("readComponentTable: the inferred schema from one footer, without a Spark job") {
+    import spark.implicits._
+    val path = Files.createTempDirectory("graft_footer").toString + "/table"
+    SbomSources.writeComponentTable(SbomSources.withInsertedAt(
+      Seq(("one", "1.0", "MIT", "a", null: String), ("two", "2.0", "ISC", "b", "pkg:x"))
+        .toDF("name", "version", "license", "source", "purl")), path)
+    var read: org.apache.spark.sql.DataFrame = null
+    assert(jobsOf { read = SbomSources.readComponentTable(spark, path) } === 0)
+    assert(read.schema === spark.read.parquet(path).schema)
+    assert(read.collect().toSet === spark.read.parquet(path).collect().toSet)
+    // a legacy table (no partitions) reads the same way
+    val legacy = Files.createTempDirectory("graft_footer_legacy").toString + "/table"
+    Seq(("old", "0.1", "ISC")).toDF("name", "version", "license").write.parquet(legacy)
+    assert(SbomSources.readComponentTable(spark, legacy).schema ===
+      SbomSources.upgradeLegacySchema(spark.read.parquet(legacy)).schema)
   }
 
   test("inserted_at audit column stamps each appended batch (DDL DEFAULT now() analog)") {
