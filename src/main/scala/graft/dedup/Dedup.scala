@@ -2,7 +2,7 @@ package graft.dedup
 
 import graft.{Q, Tables}
 import graft.functions.PortableHash
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType}
 
@@ -580,14 +580,6 @@ object Dedup {
   def connectedComponents(pairs: DataFrame, maxIters: Int = 20): DataFrame = {
     import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     // undirected edge list, both directions
-    val ccDebug = sys.env.contains("GRAFT_CC_DEBUG")
-    def dbg[A](what: String)(f: => A): A =
-      if (!ccDebug) f else {
-        val t0 = System.nanoTime()
-        val r = f
-        System.err.println(f"[cc] $what ${(System.nanoTime() - t0) / 1e9}%.2f s")
-        r
-      }
     // No distinct and no intermediate persist: every producer hands this
     // loop a deduped (id1 < id2) pair list (simhashPairs ends in
     // .distinct()), so doubling directions cannot create duplicate
@@ -597,27 +589,34 @@ object Dedup {
     // removed extra persist held a second copy of the same edges.
     val edges0 = pairs.select(col("id1").as("src"), col("id2").as("dst"))
       .unionAll(pairs.select(col("id2").as("src"), col("id1").as("dst")))
-    // Size the iteration's parallelism to the graph, not the session
-    // default: each round is a join+agg over the edge list, and tiny
-    // graphs on many partitions pay per-round scheduling that dwarfs the
-    // work (~500k edges per partition is comfortable).
-    val edgeCount = dbg("edge materialize")(2L * pairs.count())
     val spark = pairs.sparkSession
-    val nParts = math.max(1, math.min(spark.sparkContext.defaultParallelism,
-      (edgeCount / 500000L).toInt + 1))
+    val nParts = loopParts(spark, 2L * pairs.count())
+    // persisted (and so planned) on the session's own conf, before the loop's
     val edges = edges0.repartition(nParts, col("dst"))
       .persist(MEMORY_AND_DISK)
-    // Iterative micro-queries: AQE re-materializes and re-plans every
-    // shuffle stage (a blocking round-trip per stage), and the session's
-    // shuffle partitioning fans tiny data across idle tasks — both
-    // overwhelm the actual join work here. Pin both for the loop only.
+    withLoopConf(spark, nParts)(connectedComponentsLoop(edges, maxIters))
+  }
+
+  /** Shuffle partitions for a loop over `edgeCount` directed edges: ~500k
+    * edges a partition, not the session default, since tiny graphs on many
+    * partitions pay per-round scheduling that dwarfs the work.
+    */
+  private def loopParts(spark: SparkSession, edgeCount: Long): Int =
+    math.max(1, math.min(spark.sparkContext.defaultParallelism,
+      (edgeCount / 500000L).toInt + 1))
+
+  /** Runs an iterative loop with AQE off and `nParts` shuffle partitions
+    * on the session, restoring both after: AQE re-plans every shuffle
+    * stage of each micro-query (a blocking round-trip per stage), and the
+    * session's partitioning fans tiny data across idle tasks.
+    */
+  private def withLoopConf[A](spark: SparkSession, nParts: Int)(loop: => A): A = {
     val oldAqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
     val oldParts = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     spark.conf.set("spark.sql.shuffle.partitions", nParts.toString)
-    try {
-      connectedComponentsLoop(edges, maxIters)
-    } finally {
+    try loop
+    finally {
       spark.conf.set("spark.sql.adaptive.enabled", oldAqe)
       spark.conf.set("spark.sql.shuffle.partitions", oldParts)
     }
@@ -673,14 +672,10 @@ object Dedup {
       ls.join(l2.hint("shuffle_hash"), col("label") === col("jid"), "left")
         .select(col("id"), coalesce(col("jlabel"), col("label")).as("label"))
     }
-    val debug = sys.env.contains("GRAFT_CC_DEBUG")
     while (sum < prevSum && i < maxIters) {
-      val t0 = if (debug) System.nanoTime() else 0L
       val next = jump(step(jump(step(labels)))).localCheckpoint(false)
       prevSum = sum
       sum = next.agg(org.apache.spark.sql.functions.sum(col("label"))).head().getLong(0)
-      if (debug) System.err.println(
-        f"[cc] round $i sum=$sum wall=${(System.nanoTime() - t0) / 1e9}%.2f s")
       labels = next
       i += 2
     }
@@ -1933,13 +1928,8 @@ object Dedup {
     val spark = t.spark
     import spark.implicits._
     val pairs = simhashPairs(t).select(col("id1"), col("id2"))
-    val nParts = math.max(1, math.min(spark.sparkContext.defaultParallelism,
-      (2L * pairs.count() / 500000L).toInt + 1))
-    val oldAqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    val oldParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.shuffle.partitions", nParts.toString)
-    try {
+    val nParts = loopParts(spark, 2L * pairs.count())
+    withLoopConf(spark, nParts) {
       var e = pairs.select(col("id1").as("src"), col("id2").as("dst"))
         .unionAll(pairs.select(col("id2").as("src"), col("id1").as("dst")))
         .repartition(nParts, col("src"))
@@ -1961,9 +1951,6 @@ object Dedup {
       }
       trajectory.toDF("peel_round", "n_nodes", "n_edges")
         .orderBy(col("peel_round"))
-    } finally {
-      spark.conf.set("spark.sql.adaptive.enabled", oldAqe)
-      spark.conf.set("spark.sql.shuffle.partitions", oldParts)
     }
   }
 

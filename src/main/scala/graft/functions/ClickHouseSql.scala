@@ -3267,6 +3267,8 @@ object ClickHouseSql {
     if (l.contains("transform")) out = rewriteChTransform(out)
     if (l.contains("?")) out = rewriteTernary(out)
     if (l.contains("final")) out = rewriteFinal(out, columnsOf)
+    if (l.contains("arrayjoin") && l.contains("group"))
+      out = rewriteArrayJoinGroupAlias(out)
     if (l.contains("array")) out = rewriteArrayJoin(out)
     if (l.contains("sample")) out = rewriteSample(out)
     if (l.contains("qualify")) out = rewriteQualify(out)
@@ -5143,6 +5145,42 @@ object ClickHouseSql {
         }.mkString(", ")
         s"(SELECT $sel FROM $table GROUP BY $keys)"
     }
+  }
+
+  /** A select-list `arrayJoin(e) AS a` whose SELECT groups by `a` (Spark
+    * cannot group by a generator's alias): the item becomes the column
+    * `a` and the FROM clause gains `ARRAY JOIN e AS a`, which
+    * [[rewriteArrayJoin]] lowers to a LATERAL VIEW. ClickHouse unfolds a
+    * select-list arrayJoin before grouping, so both forms mean the same.
+    */
+  private def rewriteArrayJoinGroupAlias(sqlText: String): String = {
+    val ts = lex(sqlText)
+    val hits = ts.indices.iterator.filter(ts(_).lower == "select").flatMap { si =>
+      val d = ts(si).depth
+      // the SELECT's tokens at its own depth, up to a set operator or SELECT
+      val same = si +: (si + 1 until ts.length).takeWhile(j => ts(j).depth >= d &&
+        !(ts(j).depth == d && Set("select", "union", "intersect", "except")(ts(j).lower)))
+        .filter(ts(_).depth == d)
+      def at(k: Int) = same.lift(k).fold("")(ts(_).lower)
+      val from = same.indexWhere(ts(_).lower == "from")
+      val group = same.indexWhere(ts(_).lower == "group")
+      val keys = same.drop(group + 2).takeWhile(j => !clauseStart(ts(j).lower)).map(j => norm(ts(j).text))
+      // `arrayJoin ( e ) AS a` as one whole select item
+      (1 until from).find(k => at(k) == "arrayjoin" && Set("select", ",")(at(k - 1)) &&
+        at(k + 1) == "(" && at(k + 2) == ")" && at(k + 3) == "as" && isIdent(ts(same(k + 4))) &&
+        Set(",", "from")(at(k + 5)) && keys.contains(norm(ts(same(k + 4)).text)))
+        .filter(_ => group > from && at(group + 1) == "by")
+        .map { k =>
+          val alias = ts(same(k + 4)).text
+          val expr = sqlText.substring(ts(same(k + 1)).end, ts(same(k + 2)).start).trim
+          val fromEnd = ts(same.drop(from + 1)
+            .find(j => clauseStart(ts(j).lower) || ts(j).lower == "prewhere").get).start
+          sqlText.substring(0, ts(same(k)).start) + alias +
+            sqlText.substring(ts(same(k + 4)).end, fromEnd) +
+            s"ARRAY JOIN $expr AS $alias " + sqlText.substring(fromEnd)
+        }
+    }
+    if (hits.hasNext) rewriteArrayJoinGroupAlias(hits.next()) else sqlText
   }
 
   /** `[LEFT] ARRAY JOIN` as a clause (ClickHouse's explode):

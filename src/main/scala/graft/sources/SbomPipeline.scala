@@ -20,14 +20,14 @@ import graft.sbom.{Sanitize, Sbom}
   *
   * Everything data-shaped runs through the existing Spark stages
   * (SbomSources); this object contributes only the mode dispatch, the
-  * document-artifact write, and the cleanup/trap + log surface
-  * (lib/common.sh) the composable functions did not carry. Documents are
-  * artifacts, not datasets — the driver-side JSON handling here touches
-  * one document per run, exactly like the reference's jq calls. The
-  * component rows are bounded the same way: a run inserts the components
-  * of the one artifact it wrote from an in-memory string, so they are
-  * collected once (the count comes from that collect) and written from
-  * the local copy instead of re-scanning the artifact.
+  * document-artifact write and the log surface (lib/common.sh).
+  * Documents are artifacts, not datasets: a run holds one document as a
+  * string, exactly like the reference's jq calls, and parses it once
+  * per stage into a one-row local relation ([[SbomSources.detectFormatOf]],
+  * [[SbomSources.cycloneDxOf]], [[SbomSources.spdxOf]]). Nothing lands in
+  * a temp file and the artifact is never read back: the components are
+  * flattened from the string the run wrote, collected once (the count
+  * comes from that collect) and written from the local copy.
   */
 object SbomPipeline {
 
@@ -150,16 +150,17 @@ object SbomPipeline {
   }
 
   /** extract_sbom_from_wrapper (sbom-processing.sh:38-55): jq
-    * 'if has("sbom") then .sbom else .' on the one fetched document;
-    * also whether what it returns is one JSON object.
+    * 'if has("sbom") then .sbom else .' on the one fetched document. jq's
+    * `has` fails on anything but an object, and only an object is an SBOM
+    * document, so a root or `.sbom` that is not one JSON object stops the
+    * run before anything is written.
     */
-  private def unwrap(doc: String): (String, Boolean) = {
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val root = mapper.readTree(doc)
-    if (root != null && root.isObject && root.has("sbom")) {
-      val sbom = root.get("sbom")
-      (sbom.toString, sbom.isObject)
-    } else (doc, root != null && root.isObject)
+  private def unwrap(doc: String): String = {
+    val root = new com.fasterxml.jackson.databind.ObjectMapper().readTree(doc)
+    val sbom = if (root.isObject && root.has("sbom")) root.get("sbom") else root
+    if (!sbom.isObject)
+      throw new IllegalStateException(s"SBOM is not one JSON object: ${sbom.getNodeType}")
+    if (sbom eq root) doc else sbom.toString
   }
 
   /** Include/exclude filename-glob filtering, exclude wins
@@ -215,55 +216,12 @@ object SbomPipeline {
         col("components"))).as("merged_json"))
   }
 
-  /** Flatten the final artifact to components + license mapping — the
-    * insert_sbom_data front half (entrypoint.sh:328-417).
-    */
-  private def componentsOf(spark: SparkSession, artifact: String,
-    format: String, cfg: Config): DataFrame = {
-    val flat = format match {
-      case "cyclonedx" =>
-        SbomSources.flattenCycloneDx(SbomSources.readCycloneDx(spark, artifact))
-      case "spdxjson" =>
-        SbomSources.flattenSpdx(SbomSources.readSpdx(spark, artifact))
-      case other => fail(s"Unsupported SBOM format for ClickHouse: $other")
-    }
-    cfg.licenseMappings match {
-      case Some(m) => SbomSources.mapUnknownLicenses(flat, licenseMappings(spark, m))
-      case None => flat
-    }
-  }
-
-  /** Each mapping file's rows, kept per file version (length and
-    * modification time): every run of a deployment maps through the
-    * same file, so only the first reads it with Spark. A path that is
-    * not a plain file (a directory or a glob) is read on every run.
-    */
-  private val mappingFiles =
-    new java.util.concurrent.ConcurrentHashMap[String, ((Long, Long), Map[String, String])]()
-
-  private def licenseMappings(spark: SparkSession, path: String): Map[String, String] = {
-    def read(): Map[String, String] = SbomSources.readLicenseMappings(spark, path).collect()
-      .map(r => r.getString(0) -> r.getString(1)).toMap
-    val p = new org.apache.hadoop.fs.Path(path)
-    scala.util.Try(p.getFileSystem(spark.sessionState.newHadoopConf()).getFileStatus(p))
-      .toOption.filter(_.isFile) match {
-      case None => read()
-      case Some(st) =>
-        val version = (st.getLen, st.getModificationTime)
-        val key = st.getPath.toString
-        Option(mappingFiles.get(key)).collect { case (`version`, m) => m }.getOrElse {
-          val m = read()
-          mappingFiles.put(key, (version, m))
-          m
-        }
-    }
-  }
-
   /** Run the full reference contract. `transport` feeds normal mode
     * (github/mend/wiz download); merge mode reads `bucketDir` directly
     * and needs none. Throws IllegalArgumentException / IllegalStateException
-    * where the reference log_error+exits; always removes its temp dir
-    * (the `trap cleanup EXIT` analog, lib/common.sh:36).
+    * where the reference log_error+exits. Nothing is landed on local disk,
+    * so there is no temp dir to clean up (the reference's `trap cleanup
+    * EXIT`, lib/common.sh:36).
     */
   def run(spark: SparkSession, config: Config,
     transport: Option[Fetcher.Transport] = None,
@@ -273,16 +231,8 @@ object SbomPipeline {
     log += "Starting SBOM pipeline"
     val cfg = sanitized(spark, config)
     validate(cfg)
-    val tempDir = java.nio.file.Files.createTempDirectory("graft_sbom_pipeline")
-    try {
-      if (cfg.merge) runMerge(spark, cfg, log)
-      else runNormal(spark, cfg, transport, fetchPolicy, sleep, tempDir, log)
-    } finally {
-      // trap cleanup EXIT (lib/common.sh:36)
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(tempDir).iterator().asScala.toSeq.reverse
-        .foreach(p => java.nio.file.Files.deleteIfExists(p))
-    }
+    if (cfg.merge) runMerge(spark, cfg, log)
+    else runNormal(spark, cfg, transport, fetchPolicy, sleep, log)
   }
 
   private def runMerge(spark: SparkSession, cfg: Config,
@@ -300,14 +250,13 @@ object SbomPipeline {
       throw new IllegalStateException(s"Merged CycloneDX SBOM is not valid JSON: $e"))
     val artifact = writeArtifact(spark, cfg.bucketDir, cfg.s3Key, envelope)
     log += s"Merged SBOM available at: $artifact"
-    val (tbl, decision, n) = tableOps(spark, cfg, artifact, "cyclonedx", log)
+    val (tbl, decision, n) = tableOps(spark, cfg, envelope, artifact, "cyclonedx", log)
     Result("merge", artifact, None, tbl, decision, n, log.toList)
   }
 
   private def runNormal(spark: SparkSession, cfg: Config,
     transport: Option[Fetcher.Transport], fetchPolicy: Fetcher.Policy,
-    sleep: Long => Unit, tempDir: java.nio.file.Path,
-    log: ListBuffer[String]): Result = {
+    sleep: Long => Unit, log: ListBuffer[String]): Result = {
     log += s"Running in NORMAL mode - processing SBOM from ${cfg.source}"
     val t = transport.getOrElse(fail(s"source=${cfg.source} requires a Transport"))
     val fetched = Fetcher.fetch(t, fetchPolicy, sleep,
@@ -319,26 +268,21 @@ object SbomPipeline {
       case Fetcher.GaveUp(stage, detail) =>
         throw new IllegalStateException(s"Failed to download SBOM ($stage): $detail")
     }
-    // unwrap → land the extracted document for the Spark readers
-    val (doc, isObject) = unwrap(fetched)
-    val extracted = tempDir.resolve("extracted_sbom.json")
-    java.nio.file.Files.writeString(extracted, doc)
-    val extractedPath = extracted.toUri.toString
-    // one JSON object is detected from the string without a scan; anything
-    // else (an array of documents) by the reader over the landed file
-    val detected =
-      if (isObject) SbomSources.detectFormatOf(spark, doc)
-      else SbomSources.detectFormat(spark, extractedPath).head.getAs[String]("format")
+    val doc = unwrap(fetched)
+    // the reference's name for the unwrapped document, which conversion's
+    // filename fallback reads
+    val extracted = "extracted_sbom.json"
+    val detected = SbomSources.detectFormatOf(spark, doc)
     log += s"Detected SBOM format: $detected"
     val processed = (detected, cfg.desiredFormat) match {
       case ("cyclonedx", "cyclonedx") => doc
       case ("cyclonedx", "spdxjson") =>
         SbomSources.convertCycloneDxToSpdx(
-          SbomSources.readCycloneDx(spark, extractedPath)).head.getAs[String]("spdx_json")
+          SbomSources.cycloneDxOf(spark, doc, extracted)).head.getAs[String]("spdx_json")
       case ("spdxjson", desired) =>
         // fix_spdx_compatibility always precedes conversion (entrypoint.sh:528)
         val fixed = SbomSources.fixSpdxCompatibility(
-          SbomSources.readSpdx(spark, extractedPath))
+          SbomSources.spdxOf(spark, doc, extracted))
         if (desired == "cyclonedx")
           SbomSources.convertSpdxToCycloneDx(fixed).head.getAs[String]("cdx_json")
         else emitSpdx(fixed).head.getAs[String]("doc")
@@ -348,25 +292,33 @@ object SbomPipeline {
       throw new IllegalStateException(s"Generated SBOM is not valid JSON: $e"))
     val artifact = writeArtifact(spark, cfg.bucketDir, cfg.s3Key, processed)
     log += s"SBOM available at: $artifact"
-    val (tbl, decision, n) = tableOps(spark, cfg, artifact, cfg.desiredFormat, log)
+    val (tbl, decision, n) = tableOps(spark, cfg, processed, artifact, cfg.desiredFormat, log)
     Result("normal", artifact, Some(detected), tbl, decision, n, log.toList)
   }
 
   /** ClickHouse operations (entrypoint.sh:466-576): derive the table
     * name, set up / migrate / truncate, insert the flattened components.
     * Skipped entirely when `tableRoot` is unset, like CLICKHOUSE_URL.
-    * The artifact is one document this run wrote from an in-memory
-    * string, so its flattened, license-mapped rows are collected once:
-    * the count is the collect's length and the insert writes those rows.
+    * `doc` is the document this run wrote to `artifact` (whose name the
+    * filename fallback reads); its flattened, license-mapped rows
+    * (insert_sbom_data, entrypoint.sh:328-417) are collected once: the
+    * count is the collect's length and the insert writes those rows.
     */
-  private def tableOps(spark: SparkSession, cfg: Config, artifact: String,
+  private def tableOps(spark: SparkSession, cfg: Config, doc: String, artifact: String,
     format: String, log: ListBuffer[String]): (Option[String], Option[String], Long) =
     cfg.tableRoot match {
       case None => (None, None, 0L)
       case Some(root) =>
         val name = tableNameFor(cfg)
         log += s"Starting ClickHouse operations for table: $name"
-        val comps = componentsOf(spark, artifact, format, cfg)
+        val flat = format match {
+          case "cyclonedx" =>
+            SbomSources.flattenCycloneDx(SbomSources.cycloneDxOf(spark, doc, artifact))
+          case "spdxjson" => SbomSources.flattenSpdx(SbomSources.spdxOf(spark, doc, artifact))
+          case other => fail(s"Unsupported SBOM format for ClickHouse: $other")
+        }
+        val comps = cfg.licenseMappings.fold(flat)(m =>
+          SbomSources.mapUnknownLicenses(flat, SbomSources.licenseMappings(spark, m)))
         val rows = comps.collect()
         val n = rows.length.toLong
         if (n == 0) {

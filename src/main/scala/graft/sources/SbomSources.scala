@@ -1,18 +1,18 @@
 package graft.sources
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** SBOM document sources + component-table sink: the reference pipeline
   * (download → detect → flatten → license-map → sorted analytics table,
-  * entrypoint.sh) as a Spark job over real JSON files.
-  *
-  * The network download stage (lib/{github,mend,wiz}.sh) is out of scope
-  * in a zero-egress environment — any fetcher that lands JSON files on
-  * storage plugs in front of these readers unchanged. At 100 TB the JSON
-  * scan is schema-projected (no full-document parse of unused fields) and
-  * every downstream step is a narrow map or broadcast join.
+  * entrypoint.sh) as Spark stages over JSON documents. [[SbomPipeline]]
+  * parses the one document [[Fetcher]] downloaded in memory; the path
+  * readers take documents on storage (merge mode's bucket, the stream);
+  * both share the schemas, unwrap, converters and flattens. At 100 TB the
+  * JSON scan is schema-projected (no full-document parse of unused
+  * fields), every downstream step is a narrow map, and the license
+  * mappings are one literal map.
   */
 object SbomSources {
 
@@ -102,6 +102,30 @@ object SbomSources {
     spark.read.schema(spdxSchema).option("multiLine", true).json(path)
       .withColumn("_file", input_file_name())
 
+  /** One JSON document held as a string, parsed with `schema`: a one-row
+    * local relation holds it as a value (a `lit` would put the whole text
+    * into every plan string) beside `file` as `_file`. `from_json` is the
+    * JSON reader's parser with the same defaults, and the optimizer folds
+    * the projection into the relation, so parsing runs no Spark job.
+    */
+  private def parsed(spark: SparkSession, doc: String, file: String,
+    schema: StructType): DataFrame =
+    spark.createDataFrame(java.util.List.of(Row(doc, file)),
+      StructType(Seq(StructField("value", StringType), StructField("_file", StringType))))
+      .select(from_json(col("value"), schema).as("d"), col("_file"))
+      .select(col("d.*"), col("_file"))
+
+  /** [[readCycloneDx]] of one document held as a string, named `file`. */
+  def cycloneDxOf(spark: SparkSession, doc: String, file: String): DataFrame =
+    unwrapped(parsed(spark, doc, file, cycloneDxWithEnvelope))
+
+  /** [[readSpdx]] of one document held as a string, named `file`. */
+  def spdxOf(spark: SparkSession, doc: String, file: String): DataFrame =
+    parsed(spark, doc, file, spdxSchema)
+
+  /** Source-ref strategy 6: the document's file name without `.json`. */
+  private def fileStem: Column = regexp_extract(col("_file"), "([^/]+)\\.json$", 1)
+
   /** Generator tools whose names are NOT source hints (entrypoint.sh:85 —
     * the `grep -v` denylist applied to metadata.tools[].name).
     */
@@ -124,7 +148,7 @@ object SbomSources {
       get(filter(col("metadata.tools"), tool =>
         tool.getField("name").isNotNull &&
           !tool.getField("name").rlike(toolNameDenylist)), lit(0)).getField("name"),
-      regexp_extract(col("_file"), "([^/]+)\\.json$", 1))
+      fileStem)
 
   /** Flatten CycloneDX documents to the component table, reproducing the
     * license fallback chain of entrypoint.sh:328-367:
@@ -162,7 +186,7 @@ object SbomSources {
   def flattenSpdx(docs: DataFrame): DataFrame =
     docs
       .select(
-        coalesce(col("name"), regexp_extract(col("_file"), "([^/]+)\\.json$", 1)).as("doc_source"),
+        coalesce(col("name"), fileStem).as("doc_source"),
         explode(col("packages")).as("p"))
       .filter(col("p.name").isNotNull)
       .select(
@@ -186,7 +210,7 @@ object SbomSources {
     * "basic check" (sbom-processing.sh:83-87). A field whose JSON type
     * does not match reads as null without nulling its neighbours
     * (spark.sql.json.enablePartialResults, on by default), so each check
-    * sees what its own scan would.
+    * sees what its own parse would.
     */
   private val detectProbeSchema: StructType = StructType(cycloneDxProbe.fields ++ Seq(
     StructField("sbom", cycloneDxProbe),
@@ -194,34 +218,20 @@ object SbomSources {
     StructField("SoftwareIdentity", StructType(Seq(
       StructField("name", StringType), StructField("tagId", StringType))))))
 
-  /** Detect document format from real field presence in one JSON scan —
-    * sbom-processing.sh:58-91 priority order: cyclonedx (read through the
-    * `.sbom` envelope, like [[readCycloneDx]]) → spdxjson → swid →
-    * spdxjson default. Returns one (file, format) row per document; a
-    * corrupt file reads as all-null and takes the default.
+  /** Detect the format of one JSON document held as a string from real
+    * field presence — sbom-processing.sh:58-91 priority order: cyclonedx
+    * (read through the `.sbom` envelope, like [[readCycloneDx]]) →
+    * spdxjson → swid → spdxjson default. Corrupt JSON parses as all-null
+    * and takes the default.
     */
-  def detectFormat(spark: SparkSession, path: String): DataFrame =
-    spark.read.schema(detectProbeSchema).option("multiLine", true).json(path)
-      .select(input_file_name().as("file"), formatOf(col).as("format"))
-
-  /** [[detectFormat]] of one JSON object held as a string: the same probe
-    * schema through `from_json` (the parser the JSON reader uses, with
-    * the same defaults) over a one-row local relation, which the
-    * optimizer folds, so no Spark job runs.
-    */
-  def detectFormatOf(spark: SparkSession, doc: String): String =
-    spark.createDataFrame(java.util.List.of(org.apache.spark.sql.Row.empty), StructType(Nil))
-      .select(from_json(lit(doc), detectProbeSchema).as("d"))
-      .select(formatOf(f => col(s"d.$f"))).head().getString(0)
-
-  /** The detection rule over the probe fields, `probe(name)` giving one. */
-  private def formatOf(probe: String => Column): Column = {
+  def detectFormatOf(spark: SparkSession, doc: String): String = {
     def cdx(field: String): Column =
-      when(probe("sbom").isNotNull, probe(s"sbom.$field")).otherwise(probe(field))
-    when(cdx("bomFormat") === "CycloneDX" || cdx("metadata.component").isNotNull, "cyclonedx")
-      .when(probe("spdxVersion").isNotNull || probe("SPDXID").isNotNull, "spdxjson")
-      .when(probe("SoftwareIdentity").isNotNull, "swid")
-      .otherwise("spdxjson")
+      when(col("sbom").isNotNull, col(s"sbom.$field")).otherwise(col(field))
+    parsed(spark, doc, "", detectProbeSchema).select(
+      when(cdx("bomFormat") === "CycloneDX" || cdx("metadata.component").isNotNull, "cyclonedx")
+        .when(col("spdxVersion").isNotNull || col("SPDXID").isNotNull, "spdxjson")
+        .when(col("SoftwareIdentity").isNotNull, "swid")
+        .otherwise("spdxjson")).head().getString(0)
   }
 
   /** fix_spdx_compatibility (sbom-processing.sh:7-35) as a document walk:
@@ -265,8 +275,7 @@ object SbomSources {
         lit(1L).as("version"),
         struct(
           struct(lit("application").as("type"),
-            coalesce(col("name"), regexp_extract(col("_file"), "([^/]+)\\.json$", 1))
-              .as("name")).as("component")).as("metadata"),
+            coalesce(col("name"), fileStem).as("name")).as("component")).as("metadata"),
         transform(col("packages"), p => struct(
           lit("library").as("type"),
           p.getField("name").as("name"),
@@ -287,8 +296,7 @@ object SbomSources {
       to_json(struct(
         lit("SPDX-2.3").as("spdxVersion"),
         lit("SPDXRef-DOCUMENT").as("SPDXID"),
-        coalesce(col("metadata.component.name"), col("name"),
-          regexp_extract(col("_file"), "([^/]+)\\.json$", 1)).as("name"),
+        coalesce(col("metadata.component.name"), col("name"), fileStem).as("name"),
         transform(col("components"), c => {
           val lic0 = get(c.getField("licenses"), lit(0))
           struct(
@@ -323,40 +331,40 @@ object SbomSources {
       .drop("__rn")
   }
 
-  /** Load the reference's license-mappings.json — a single JSON object
-    * mapping package name → SPDX id (947 entries in the shipped file).
-    * One wholetext read + from_json(Map) + explode: a narrow pass whose
-    * result is broadcast-sized by construction (a hand-maintained file),
-    * which is exactly what mapUnknownLicenses broadcasts.
+  /** The reference's license-mappings.json — one JSON object mapping
+    * package name → SPDX id (947 entries in the shipped file) — read on
+    * the driver through the path's Hadoop FileSystem, the way the
+    * pipeline writes its artifact. Anything but one object of string
+    * values fails, naming the file.
     */
-  def readLicenseMappings(spark: SparkSession, path: String): DataFrame =
-    spark.read.option("wholetext", true).text(path)
-      .select(explode(from_json(col("value"), MapType(StringType, StringType)))
-        .as(Seq("name", "mapped_license")))
+  def licenseMappings(spark: SparkSession, path: String): Map[String, String] = {
+    import scala.jdk.CollectionConverters._
+    def bad(why: String): Nothing =
+      throw new IllegalArgumentException(s"license mappings $path: $why")
+    val p = new org.apache.hadoop.fs.Path(path)
+    val in = p.getFileSystem(spark.sessionState.newHadoopConf()).open(p)
+    val root =
+      try new com.fasterxml.jackson.databind.ObjectMapper().readTree(in)
+      catch { case e: com.fasterxml.jackson.core.JacksonException => bad(e.getOriginalMessage) }
+      finally in.close()
+    if (root == null || !root.isObject) bad("not one JSON object")
+    root.properties().asScala.map { e =>
+      if (!e.getValue.isTextual) bad(s"the value of '${e.getKey}' is not a string")
+      e.getKey -> e.getValue.asText
+    }.toMap
+  }
 
-  /** The unknown-license rule (entrypoint.sh:245-269): an unknown, empty,
-    * "null" or missing license takes the `mapped` id, else stays 'unknown'.
-    */
-  private def mappedLicense(mapped: Column): Column =
-    when(col("license").isin("unknown", "", "null") || col("license").isNull,
-      coalesce(mapped, lit("unknown")))
-      .otherwise(col("license")).as("license")
-
-  /** Apply the unknown-license mapping dim (entrypoint.sh:245-269). */
-  def mapUnknownLicenses(components: DataFrame, mapping: DataFrame): DataFrame =
-    components
-      .join(broadcast(mapping.select(col("name").as("m_name"), col("mapped_license"))),
-        col("name") === col("m_name"), "left")
-      .select(col("name"), col("version"), mappedLicense(col("mapped_license")),
-        col("source"), col("purl"))
-
-  /** The same mapping with the mapping rows already collected: a lookup
-    * in one literal map instead of the broadcast join, so no Spark job
-    * builds a broadcast.
+  /** Apply the unknown-license mapping (entrypoint.sh:245-269): an
+    * unknown, empty, "null" or missing license takes the mapped id, else
+    * stays 'unknown'. The mapping is one literal map, so the lookup needs
+    * no join and no Spark job.
     */
   def mapUnknownLicenses(components: DataFrame, mapping: Map[String, String]): DataFrame =
     components.select(col("name"), col("version"),
-      mappedLicense(typedLit(mapping).apply(col("name"))), col("source"), col("purl"))
+      when(col("license").isin("unknown", "", "null") || col("license").isNull,
+        coalesce(typedLit(mapping).apply(col("name")), lit("unknown")))
+        .otherwise(col("license")).as("license"),
+      col("source"), col("purl"))
 
   /** Sink: the ClickHouse MergeTree analog — parquet partitioned by the
     * low-cardinality source, sorted within partitions by the table's

@@ -24,9 +24,9 @@ import org.apache.spark.sql.util.QueryExecutionListener
   *   node names: `CartesianProduct`, `BroadcastNestedLoopJoin`.
   * - `executed`: runs each name — a query through the noop sink, or a
   *   `_build_<step>` — and prints every plan it executed, numbered in
-  *   action order, builder-fired actions included. These are the AQE
-  *   final plans (coalesced reads, runtime join rewrites, reused
-  *   exchanges), which a static `plan` cannot show.
+  *   action order with its wall time, builder-fired actions included.
+  *   These are the AQE final plans (coalesced reads, runtime join
+  *   rewrites, reused exchanges), which a static `plan` cannot show.
   * - `build`: time the named build steps (`SparkEntry.builds` names),
   *   or all of them in registry order.
   *
@@ -85,10 +85,10 @@ object Probe {
     }.mkString
 
   private def executed(spark: SparkSession, sfDir: String, names: Seq[String]): String = {
-    val captured = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    val captured = new java.util.concurrent.ConcurrentLinkedQueue[(String, Long, String)]()
     val listener = new QueryExecutionListener {
       override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-        captured.add(funcName -> qe.executedPlan.toString)
+        captured.add((funcName, durationNs, qe.executedPlan.toString))
       override def onFailure(funcName: String, qe: QueryExecution,
         exception: Exception): Unit = ()
     }
@@ -100,8 +100,9 @@ object Probe {
       else noop(query(spark, sfDir, name))
       // listener events arrive on the bus asynchronously
       ListenerBusAccess.waitUntilEmpty(spark.sparkContext)
-      val actions = captured.toArray(Array.empty[(String, String)]).zipWithIndex.map {
-        case ((func, plan), i) => s"-------- action ${i + 1} ($func) --------\n$plan\n"
+      val actions = captured.toArray(Array.empty[(String, Long, String)]).zipWithIndex.map {
+        case ((func, ns, plan), i) =>
+          f"-------- action ${i + 1} ($func, ${ns / 1e6}%.1f ms) --------\n$plan\n"
       }
       s"======== $name (executed) ========\n" +
         (if (actions.isEmpty) "(no plan captured)\n" else actions.mkString)

@@ -372,6 +372,21 @@ class ClickHouseDialectSpec extends SparkSpec {
       "SELECT 1 FROM t ARRAY JOIN a, b", _ => Seq("a", "b")))
   }
 
+  test("GROUP BY the alias of a select-list arrayJoin matches the subquery form") {
+    spark.sql("SELECT * FROM VALUES (1, 'a b a'), (2, 'b c'), (3, 'c') AS t(id, text)")
+      .createOrReplaceTempView("aj_docs")
+    def rows(q: String) = ClickHouseSql.sql(spark, q).collect().map(_.toSeq).toSet
+    val words = rows("SELECT arrayJoin(splitByChar(' ', text)) AS w, count() FROM aj_docs GROUP BY w")
+    assert(words === rows("SELECT w, count() FROM (SELECT arrayJoin(splitByChar(' ', text)) AS w " +
+      "FROM aj_docs) GROUP BY w"))
+    assert(words === Set(Seq("a", 2L), Seq("b", 2L), Seq("c", 2L)))
+    // beside another key, with WHERE and HAVING around it
+    assert(rows("SELECT id, arrayJoin(splitByChar(' ', text)) AS w, count() AS n FROM aj_docs " +
+      "WHERE id < 3 GROUP BY id, w HAVING n >= 1") ===
+      rows("SELECT id, w, count() AS n FROM (SELECT id, arrayJoin(splitByChar(' ', text)) AS w " +
+        "FROM aj_docs WHERE id < 3) GROUP BY id, w HAVING n >= 1"))
+  }
+
   test("LIMIT n BY keeps the first n rows per group") {
     sf0001.orders.createOrReplaceTempView("lb_orders")
     val got = ClickHouseSql.sql(spark, """

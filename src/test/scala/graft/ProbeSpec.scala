@@ -37,6 +37,8 @@ class ProbeSpec extends SparkSpec {
     val out = Probe.run(spark, Array("executed", sf, "q01_pricing_summary"))
     assert(out.contains("======== q01_pricing_summary (executed) ========"), out)
     assert(out.contains("-------- action 1 "), out)
+    // each action's header carries its wall time
+    assert("""-------- action 1 \(\w+, \d+\.\d ms\) --------""".r.findFirstIn(out).nonEmpty, out)
     assert(!out.contains("(no plan captured)"), out)
   }
 

@@ -90,10 +90,9 @@ class SbomPipelineSpec extends SparkSpec {
       SbomPipeline.run(spark, SbomPipeline.Config(source = "github",
         repository = Some("not a repo!"), bucketDir = bucket), None, sleep = _ => ())
     }) === 0)
-    // detect (none: one JSON object is probed from the string), collect
-    // the mapped components (the mapping file's read, unless an earlier
-    // run read this version of it, + the artifact scan), write (shuffle +
-    // write)
+    // detect and parse (none: the document is parsed from the string it
+    // is held as), read the mapping file (none: a driver-side read),
+    // collect the mapped components, write (shuffle + write)
     var res: SbomPipeline.Result = null
     val jobs = jobsOf {
       res = SbomPipeline.run(spark, SbomPipeline.Config(
@@ -113,15 +112,62 @@ class SbomPipelineSpec extends SparkSpec {
       tableRoot = Some(tables), licenseMappings = Some(mappings))
     assert(SbomPipeline.run(spark, cfg, Some(stubGithub(cdxDoc)), sleep = _ => ())
       .tableDecision === Some("created"))
-    // the table's source= partitions show it needs no migration, and the
-    // mapping file is the one the first run read: the artifact scan and
-    // the write are all that is left
+    // the table's source= partitions show it needs no migration: the
+    // components' collect and the write are all that is left
     var res: SbomPipeline.Result = null
     val jobs = jobsOf {
       res = SbomPipeline.run(spark, cfg, Some(stubGithub(cdxDoc2)), sleep = _ => ())
     }
     assert(res.tableDecision === Some("appended") && res.componentCount === 2)
     assert(jobs <= 3, s"$jobs Spark jobs for an append")
+  }
+
+  test("job budget: converting a wrapped SPDX document scans no file") {
+    val (bucket, tables) = freshDirs()
+    var res: SbomPipeline.Result = null
+    val jobs = jobsOf {
+      res = SbomPipeline.run(spark, SbomPipeline.Config(
+        source = "github", repository = Some("acme/convert"), bucketDir = bucket,
+        tableRoot = Some(tables), licenseMappings = Some(mappings)),
+        Some(stubGithub(spdxWrapped)), sleep = _ => ())
+    }
+    assert(res.detectedFormat === Some("spdxjson"))
+    assert(res.tableDecision === Some("created") && res.componentCount === 3)
+    // the conversion folds into its one-row relation: the components'
+    // collect and the write (shuffle + write) are all the jobs there are
+    assert(jobs <= 3, s"$jobs Spark jobs for a converting insert")
+  }
+
+  test("a fetched document that is not one JSON object stops the run before any write") {
+    val (bucket, tables) = freshDirs()
+    Seq(s"[$cdxDoc]", s"""{"sbom": [$cdxDoc]}""").foreach { doc =>
+      val e = intercept[IllegalStateException] {
+        SbomPipeline.run(spark, SbomPipeline.Config(
+          source = "github", repository = Some("acme/array"), bucketDir = bucket,
+          tableRoot = Some(tables)), Some(stubGithub(doc)), sleep = _ => ())
+      }
+      assert(e.getMessage.contains("not one JSON object"), e.getMessage)
+    }
+    assert(new java.io.File(bucket).list().isEmpty, "no artifact")
+    assert(new java.io.File(tables).list().isEmpty, "no table")
+  }
+
+  test("a license-mappings file that is not one JSON object of strings fails the run") {
+    val (bucket, tables) = freshDirs()
+    val d = Files.createTempDirectory("graft_pipe_badmap")
+    Seq("""[{"mystery": "MIT"}]""", """{"mystery": 1}""", """{"mystery": null}""",
+      """{"mystery": """).zipWithIndex.foreach { case (content, i) =>
+      val file = d.resolve(s"mappings-$i.json")
+      Files.writeString(file, content)
+      val e = intercept[IllegalArgumentException] {
+        SbomPipeline.run(spark, SbomPipeline.Config(
+          source = "github", repository = Some("acme/badmap"), bucketDir = bucket,
+          tableRoot = Some(tables), licenseMappings = Some(file.toString)),
+          Some(stubGithub(cdxDoc)), sleep = _ => ())
+      }
+      assert(e.getMessage.contains(file.toString), e.getMessage)
+    }
+    assert(!Files.exists(Paths.get(tables, "acme_badmap")), "no table")
   }
 
   test("a rewritten license-mappings file is read again") {

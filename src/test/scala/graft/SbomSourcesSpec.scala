@@ -63,6 +63,53 @@ class SbomSourcesSpec extends SparkSpec {
       |  ]
       |}""".stripMargin
 
+  // source-ref strategies 4, 5 and 6 (entrypoint.sh:75-104)
+  private val topLevelNamed =
+    """{"bomFormat": "CycloneDX", "name": "named-at-top",
+      | "components": [{"type": "library", "name": "libx", "version": "1"}]}""".stripMargin
+  private val toolsOnly =
+    """{"bomFormat": "CycloneDX",
+      | "metadata": {"tools": [
+      |   {"vendor": "gh", "name": "GitHub.com-Dependency-Graph"},
+      |   {"vendor": "cdx", "name": "CycloneDX-cli"},
+      |   {"vendor": "wiz", "name": "wiz-scanner"}]},
+      | "components": [{"type": "library", "name": "liby", "version": "2"}]}""".stripMargin
+  private val bareFile =
+    """{"bomFormat": "CycloneDX",
+      | "metadata": {"tools": [{"vendor": "cdx", "name": "cyclonedx-merge"}]},
+      | "components": [{"type": "library", "name": "libz", "version": "3"}]}""".stripMargin
+
+  private val spdxRefs =
+    """{
+      |  "spdxVersion": "SPDX-2.3",
+      |  "SPDXID": "SPDXRef-DOCUMENT",
+      |  "name": "repo-sbom",
+      |  "packages": [
+      |    {"name": "pkg-one", "SPDXID": "SPDXRef-1", "versionInfo": "4.5",
+      |     "licenseConcluded": "GPL-3.0",
+      |     "externalRefs": [
+      |       {"referenceCategory": "PACKAGE-MANAGER", "referenceType": "purl",
+      |        "referenceLocator": "pkg:generic/pkg-one@4.5"},
+      |       {"referenceCategory": "wat", "referenceType": "cpe", "referenceLocator": "x"}]},
+      |    {"name": "pkg-two", "SPDXID": "SPDXRef-2", "licenseDeclared": "ISC"}
+      |  ]
+      |}""".stripMargin
+
+  // type-mismatched fields and an envelope, each named after its format
+  private val mismatched = Seq(
+    "swid-1.json" -> """{"SoftwareIdentity": {"name": "a", "tagId": "t"}, "metadata": 5}""",
+    "spdxjson-2.json" ->
+      """{"spdxVersion": "SPDX-2.3", "metadata": {"component": "str"}, "bomFormat": ["x"]}""",
+    "cyclonedx-3.json" ->
+      """{"bomFormat": "CycloneDX", "spdxVersion": {"a": 1}, "SoftwareIdentity": "nope"}""",
+    "spdxjson-4.json" -> """{"SoftwareIdentity": {"name": "a"}, "spdxVersion": {"x": [1]}}""",
+    "cyclonedx-5.json" -> s"""{"sbom": $cdxDoc2}""")
+
+  /** Each JSON file of `d` by name, with the format detected from its text. */
+  private def formatsIn(d: String): Map[String, String] =
+    new java.io.File(d).listFiles().filter(_.getName.endsWith(".json"))
+      .map(f => f.getName -> SbomSources.detectFormatOf(spark, Files.readString(f.toPath))).toMap
+
   private lazy val dir = {
     val d = Files.createTempDirectory("graft_sbom").toString
     Files.writeString(Paths.get(d, "service-a.json"), cdxDoc)
@@ -90,8 +137,7 @@ class SbomSourcesSpec extends SparkSpec {
     val flat = SbomSources.flattenCycloneDx(SbomSources.readCycloneDx(spark, d))
     // only the valid document's components flow through
     assert(flat.count() === 4)
-    val fmts = SbomSources.detectFormat(spark, d).collect()
-      .map(r => (r.getString(0).split("/").last, r.getString(1))).toMap
+    val fmts = formatsIn(d)
     assert(fmts("good.json") === "cyclonedx")
     assert(fmts("corrupt.json") === "spdxjson") // the reference's default fallback
   }
@@ -115,8 +161,7 @@ class SbomSourcesSpec extends SparkSpec {
   }
 
   test("format detection over real JSON files") {
-    val formats = SbomSources.detectFormat(spark, dir).collect()
-      .map(r => (r.getString(0).split("/").last, r.getString(1))).toMap
+    val formats = formatsIn(dir)
     assert(formats("service-a.json") === "cyclonedx")
     assert(formats("service-b.json") === "cyclonedx")
     assert(formats("repo.json") === "spdxjson")
@@ -127,29 +172,19 @@ class SbomSourcesSpec extends SparkSpec {
     Files.writeString(Paths.get(d, "tag.json"),
       """{"SoftwareIdentity": {"name": "acme-app", "tagId": "abc-123"}}""")
     Files.writeString(Paths.get(d, "repo.json"), spdxDoc)
-    val formats = SbomSources.detectFormat(spark, d).collect()
-      .map(r => (r.getString(0).split("/").last, r.getString(1))).toMap
+    val formats = formatsIn(d)
     assert(formats("tag.json") === "swid")
     assert(formats("repo.json") === "spdxjson")
   }
 
   test("one-scan detection: a type-mismatched field nulls only itself") {
-    // each file is named after the format it must be detected as
     val d = Files.createTempDirectory("graft_detect_mismatch").toString
-    val docs = Seq(
-      "swid-1.json" -> """{"SoftwareIdentity": {"name": "a", "tagId": "t"}, "metadata": 5}""",
-      "spdxjson-2.json" ->
-        """{"spdxVersion": "SPDX-2.3", "metadata": {"component": "str"}, "bomFormat": ["x"]}""",
-      "cyclonedx-3.json" ->
-        """{"bomFormat": "CycloneDX", "spdxVersion": {"a": 1}, "SoftwareIdentity": "nope"}""",
-      "spdxjson-4.json" -> """{"SoftwareIdentity": {"name": "a"}, "spdxVersion": {"x": [1]}}""",
-      "cyclonedx-5.json" -> s"""{"sbom": $cdxDoc2}""")
+    val docs = mismatched
     docs.foreach { case (f, json) => Files.writeString(Paths.get(d, f), json) }
-    val formats = SbomSources.detectFormat(spark, d).collect()
-      .map(r => (r.getString(0).split("/").last, r.getString(1))).toMap
+    val formats = formatsIn(d)
     assert(formats.keySet === docs.map(_._1).toSet)
     formats.foreach { case (f, fmt) => assert(fmt === f.takeWhile(_ != '-'), f) }
-    // the string form decides every fixture the same way, without a job
+    // every fixture is decided without a job
     docs.foreach { case (f, json) =>
       var fmt: String = null
       assert(jobsOf { fmt = SbomSources.detectFormatOf(spark, json) } === 0, f)
@@ -163,22 +198,11 @@ class SbomSourcesSpec extends SparkSpec {
   test("source-ref strategies 4 and 5: top-level name, then tools-name hint with denylist") {
     val d = Files.createTempDirectory("graft_srcref").toString
     // strategy 4: no metadata names at all, but a top-level .name
-    Files.writeString(Paths.get(d, "toplevel.json"),
-      """{"bomFormat": "CycloneDX", "name": "named-at-top",
-        | "components": [{"type": "library", "name": "libx", "version": "1"}]}""".stripMargin)
+    Files.writeString(Paths.get(d, "toplevel.json"), topLevelNamed)
     // strategy 5: only tools names, the first two denylisted generators
-    Files.writeString(Paths.get(d, "toolsonly.json"),
-      """{"bomFormat": "CycloneDX",
-        | "metadata": {"tools": [
-        |   {"vendor": "gh", "name": "GitHub.com-Dependency-Graph"},
-        |   {"vendor": "cdx", "name": "CycloneDX-cli"},
-        |   {"vendor": "wiz", "name": "wiz-scanner"}]},
-        | "components": [{"type": "library", "name": "liby", "version": "2"}]}""".stripMargin)
+    Files.writeString(Paths.get(d, "toolsonly.json"), toolsOnly)
     // strategy 6: nothing usable → filename fallback
-    Files.writeString(Paths.get(d, "barefile.json"),
-      """{"bomFormat": "CycloneDX",
-        | "metadata": {"tools": [{"vendor": "cdx", "name": "cyclonedx-merge"}]},
-        | "components": [{"type": "library", "name": "libz", "version": "3"}]}""".stripMargin)
+    Files.writeString(Paths.get(d, "barefile.json"), bareFile)
     val flat = SbomSources.flattenCycloneDx(SbomSources.readCycloneDx(spark, d))
       .collect().map(r => r.getAs[String]("name") -> r.getAs[String]("source")).toMap
     assert(flat("libx") === "named-at-top")
@@ -205,21 +229,7 @@ class SbomSourcesSpec extends SparkSpec {
 
   test("SPDX→CycloneDX conversion: compatibility walk + emitted doc re-reads as CycloneDX") {
     val d = Files.createTempDirectory("graft_convert").toString
-    Files.writeString(Paths.get(d, "repo.json"),
-      """{
-        |  "spdxVersion": "SPDX-2.3",
-        |  "SPDXID": "SPDXRef-DOCUMENT",
-        |  "name": "repo-sbom",
-        |  "packages": [
-        |    {"name": "pkg-one", "SPDXID": "SPDXRef-1", "versionInfo": "4.5",
-        |     "licenseConcluded": "GPL-3.0",
-        |     "externalRefs": [
-        |       {"referenceCategory": "PACKAGE-MANAGER", "referenceType": "purl",
-        |        "referenceLocator": "pkg:generic/pkg-one@4.5"},
-        |       {"referenceCategory": "wat", "referenceType": "cpe", "referenceLocator": "x"}]},
-        |    {"name": "pkg-two", "SPDXID": "SPDXRef-2", "licenseDeclared": "ISC"}
-        |  ]
-        |}""".stripMargin)
+    Files.writeString(Paths.get(d, "repo.json"), spdxRefs)
     val fixed = SbomSources.fixSpdxCompatibility(SbomSources.readSpdx(spark, d))
     val cats = fixed.select(explode(col("packages")).as("p"))
       .select(explode(col("p.externalRefs")).as("r"))
@@ -254,8 +264,39 @@ class SbomSourcesSpec extends SparkSpec {
     assert(flat("mystery") === (("NOASSERTION", "service-a")))
   }
 
+  test("the string parsers give the path readers' rows on every fixture") {
+    val d = Files.createTempDirectory("graft_string_parse").toString
+    val fixtures = Seq(
+      "service-a.json" -> cdxDoc, "service-b.json" -> cdxDoc2, "repo.json" -> spdxDoc,
+      "wrapped.json" -> s"""{"sbom": $cdxDoc}""", "toplevel.json" -> topLevelNamed,
+      "toolsonly.json" -> toolsOnly, "barefile.json" -> bareFile, "refs.json" -> spdxRefs,
+      "tag.json" -> """{"SoftwareIdentity": {"name": "acme-app", "tagId": "abc-123"}}""",
+      "corrupt.json" -> "{not json at all!!") ++ mismatched
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSeq
+    fixtures.foreach { case (f, json) =>
+      val path = Paths.get(d, f)
+      Files.writeString(path, json)
+      val file = path.toUri.toString
+      val (cdxFile, cdxString) =
+        (SbomSources.readCycloneDx(spark, path.toString), SbomSources.cycloneDxOf(spark, json, file))
+      val (spdxFile, spdxString) =
+        (SbomSources.readSpdx(spark, path.toString), SbomSources.spdxOf(spark, json, file))
+      assert(rows(SbomSources.flattenCycloneDx(cdxString)) ===
+        rows(SbomSources.flattenCycloneDx(cdxFile)), f)
+      assert(rows(SbomSources.flattenSpdx(spdxString)) ===
+        rows(SbomSources.flattenSpdx(spdxFile)), f)
+      assert(rows(SbomSources.convertCycloneDxToSpdx(cdxString).select("spdx_json")) ===
+        rows(SbomSources.convertCycloneDxToSpdx(cdxFile).select("spdx_json")), f)
+      def toCdx(docs: org.apache.spark.sql.DataFrame) = SbomSources.convertSpdxToCycloneDx(
+        SbomSources.fixSpdxCompatibility(docs)).select("cdx_json")
+      assert(rows(toCdx(spdxString)) === rows(toCdx(spdxFile)), f)
+    }
+    // strategy 6 names the document after `_file`
+    assert(SbomSources.flattenCycloneDx(SbomSources.cycloneDxOf(spark, bareFile, "s3://b/k/art.json"))
+      .head().getAs[String]("source") === "art")
+  }
+
   test("merge dedups by name@version#purl^source; mapping fills unknown; sink round-trips sorted") {
-    import spark.implicits._
     val a = SbomSources.flattenCycloneDx(SbomSources.readCycloneDx(spark, s"$dir/service-a.json"))
     val b = SbomSources.flattenCycloneDx(SbomSources.readCycloneDx(spark, s"$dir/service-b.json"))
     val merged = SbomSources.mergeComponents(a, b)
@@ -265,13 +306,12 @@ class SbomSourcesSpec extends SparkSpec {
     // double merge of the same doc dedups to the same count
     assert(SbomSources.mergeComponents(a, a).count() === 4)
 
-    val mapping = Seq(("mystery", "MIT")).toDF("name", "mapped_license")
-    val mapped = SbomSources.mapUnknownLicenses(merged, mapping)
+    val mapped = SbomSources.mapUnknownLicenses(merged, Map("mystery" -> "MIT"))
     assert(mapped.filter(col("name") === "mystery").head().getAs[String]("license") === "MIT")
     assert(mapped.filter(col("name") === "libbaz").head().getAs[String]("license") === "BSD-3-Clause")
-    // the literal-map form maps the same rows
-    assert(SbomSources.mapUnknownLicenses(merged, Map("mystery" -> "MIT")).collect().toSet ===
-      mapped.collect().toSet)
+    // every row with a known license passes through unchanged
+    assert(mapped.filter(col("name") =!= "mystery").collect().toSet ===
+      merged.filter(col("name") =!= "mystery").collect().toSet)
 
     val out = Files.createTempDirectory("graft_comp_table").toString
     SbomSources.writeComponentTable(mapped, out)
@@ -281,12 +321,11 @@ class SbomSourcesSpec extends SparkSpec {
     assert(back.filter(col("source") === "service-b").count() === 1)
   }
 
-  test("real license-mappings.json loads and applies through the unknown-license join") {
+  test("real license-mappings.json loads and applies through the unknown-license map") {
     import spark.implicits._
     val mappingsFile = "/root/reference/license-mappings.json"
     assume(Files.exists(Paths.get(mappingsFile)), "reference mappings file not present")
-    val mapping = SbomSources.readLicenseMappings(spark, mappingsFile)
-    val rows = mapping.collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    val rows = SbomSources.licenseMappings(spark, mappingsFile)
     // the shipped file is a flat name → SPDX-id object with ~950 entries
     assert(rows.size > 900)
     assert(rows.values.forall(_.nonEmpty))
@@ -302,7 +341,7 @@ class SbomSourcesSpec extends SparkSpec {
       ("astro", "4.0", "GPL-3.0", "repo-b", null: String), // known license untouched
       ("never-mapped", "0.1", "unknown", "repo-a", null: String))
       .toDF("name", "version", "license", "source", "purl")
-    val mapped = SbomSources.mapUnknownLicenses(comps, mapping)
+    val mapped = SbomSources.mapUnknownLicenses(comps, rows)
       .collect().map(r => (r.getAs[String]("name"), r.getAs[String]("source")) ->
         r.getAs[String]("license")).toMap
     assert(mapped(("astro", "repo-a")) === "MIT")
