@@ -124,10 +124,14 @@ object Fetcher {
     } else None
   }
 
+  /** How a fetch ends. [[fetch]] returns a [[TransportResult]];
+    * [[fetchViaSignedUrl]] can also return [[UrlFetched]]. */
   sealed trait Result
+  /** What [[fetch]] returns: the document, or the stage that gave up. */
+  sealed trait TransportResult extends Result
   final case class Fetched(document: String, requestAttempts: Int, polls: Int,
-    downloads: Int = 1) extends Result
-  final case class GaveUp(stage: String, detail: String) extends Result
+    downloads: Int = 1) extends TransportResult
+  final case class GaveUp(stage: String, detail: String) extends TransportResult
 
   /** Two-step signed-URL sources (wiz.sh:47-120 `download_wiz_report` →
     * wiz.sh:123 `download_wiz_report_from_url`; mend.sh:250
@@ -283,7 +287,7 @@ object Fetcher {
     sleep: Long => Unit = Thread.sleep,
     retryable: String => Boolean = _ => true,
     validate: String => Either[String, Unit] = _ => Right(()),
-    rateLimited: String => Option[Long] = _ => None): Result = {
+    rateLimited: String => Option[Long] = _ => None): TransportResult = {
     def backoff(i: Int): Long =
       policy.backoffMs(math.min(i, policy.backoffMs.size - 1))
 
@@ -336,7 +340,7 @@ object Fetcher {
             // 3. download + validate with bounded retry; fatal errors
             //    abort immediately
             var downloads = 0
-            var result: Option[Result] = None
+            var result: Option[TransportResult] = None
             while (result.isEmpty && downloads < policy.maxDownloadAttempts) {
               downloads += 1
               transport.download(tk) match {

@@ -417,7 +417,7 @@ object SbomSources {
         else {
           val tmp = new org.apache.hadoop.fs.Path(dir.toString + "._compact_tmp")
           val old = new org.apache.hadoop.fs.Path(dir.toString + "._compact_old")
-          readParquet(spark, dir.toString)
+          graft.Tables.open(spark, dir.toString)
             .coalesce(nOut)
             .sortWithinPartitions(col("name"), col("version"), col("license"))
             .write.mode("overwrite").parquet(tmp.toString)
@@ -453,45 +453,9 @@ object SbomSources {
     if (table.columns.contains("source")) table
     else table.withColumn("source", lit("unknown"))
 
-  /** `spark.read.parquet(path)` without its schema-inference job. Without
-    * `mergeSchema`, inference takes the Spark schema stored in the footer
-    * of the first data file in path order; this reads that footer itself,
-    * outside any Spark job, and hands the schema to the reader, which
-    * still discovers the partition columns from the directory names. Summary files, merged
-    * schemas, or a footer that cannot be read or holds no Spark schema
-    * fall back to inference.
-    */
-  private def readParquet(spark: SparkSession, path: String): DataFrame = {
-    import org.apache.hadoop.fs.{FileStatus, Path}
-    val conf = spark.sessionState.newHadoopConf()
-    val root = new Path(path)
-    val fs = root.getFileSystem(conf)
-    // the names Spark's file listing skips (HadoopFSUtils.shouldFilterOutPathName)
-    def summary(n: String) = n.startsWith("_common_metadata") || n.startsWith("_metadata")
-    def hidden(n: String) = !summary(n) &&
-      ((n.startsWith("_") && !n.contains("=")) || n.startsWith(".") || n.endsWith("._COPYING_"))
-    def leaves(s: FileStatus): Seq[FileStatus] =
-      if (!s.isDirectory) Seq(s)
-      else fs.listStatus(s.getPath).toSeq.filterNot(c => hidden(c.getPath.getName)).flatMap(leaves)
-    val files = if (fs.exists(root)) leaves(fs.getFileStatus(root)) else Nil
-    val footerSchema =
-      if (spark.conf.get("spark.sql.parquet.mergeSchema", "false").toBoolean ||
-        files.exists(f => summary(f.getPath.getName))) None
-      else files.minByOption(_.getPath.toString).flatMap { f =>
-        scala.util.Try {
-          val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-            org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(f, conf))
-          try DataType.fromJson(reader.getFooter.getFileMetaData.getKeyValueMetaData
-            .get("org.apache.spark.sql.parquet.row.metadata"))
-          finally reader.close()
-        }.toOption.collect { case s: StructType => s }
-      }
-    footerSchema.fold(spark.read.parquet(path))(s => spark.read.schema(s).parquet(path))
-  }
-
   /** Read a component table of either generation (pre- or post-source). */
   def readComponentTable(spark: SparkSession, path: String): DataFrame =
-    upgradeLegacySchema(readParquet(spark, path))
+    upgradeLegacySchema(graft.Tables.open(spark, path))
 
   /** Physical migration — the ALTER TABLE … ADD COLUMN analog: rewrite a
     * legacy table into the current partitioned/sorted layout so future
@@ -502,13 +466,13 @@ object SbomSources {
     * path the reference takes (its ALTER rewrites nothing, but ClickHouse
     * materializes the default lazily — the observable semantics match).
     * A table with `source=…` partition directories has the column, which
-    * one directory listing decides; only a table without them pays the
-    * schema inference (a Spark job) to find out.
+    * one directory listing decides; only a table without them reads a
+    * footer (on the driver, no Spark job) to find out.
     */
   def migrateComponentTable(spark: SparkSession, path: String): Boolean = {
     val hadoopPath = new org.apache.hadoop.fs.Path(path)
     val fs = hadoopPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    lazy val existing = readParquet(spark, path)
+    lazy val existing = graft.Tables.open(spark, path)
     if (sourcePartitions(fs, hadoopPath).nonEmpty || existing.columns.contains("source")) false
     else {
       val tmp = new org.apache.hadoop.fs.Path(path + "__migrating")

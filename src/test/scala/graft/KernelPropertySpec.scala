@@ -2,15 +2,15 @@ package graft
 
 import graft.functions.{SignatureKernels, TopKAggregator}
 import org.apache.spark.unsafe.types.UTF8String
-import org.scalatest.funsuite.AnyFunSuite
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 
-/** Property-based checks of the pure kernels (no Spark session needed):
-  * whitespace invariance, shingle-count arithmetic, bounded-heap top-k
-  * equivalence with full sorting.
+/** Property-based checks of the pure kernels: whitespace invariance,
+  * shingle-count arithmetic, bounded-heap top-k equivalence with full
+  * sorting, on valid and malformed UTF-8. Only the null-propagation case
+  * goes through a Spark session, to reach the SQL functions.
   */
-class KernelPropertySpec extends AnyFunSuite {
+class KernelPropertySpec extends SparkSpec {
 
   /** Deterministic sampling harness over ScalaCheck generators (the
     * scalatest-scalacheck bridge isn't on the classpath).
@@ -27,6 +27,37 @@ class KernelPropertySpec extends AnyFunSuite {
 
   private val word = Gen.nonEmptyListOf(Gen.alphaLowerChar).map(_.mkString)
   private val words = Gen.listOfN(30, word).map(_.take(30))
+
+  // malformed UTF-8: generated pieces of valid text with at least one bad
+  // byte shape in between
+  private def bytes(bs: Int*): Gen[Array[Byte]] = Gen.const(bs.map(_.toByte).toArray)
+  private val validPiece = Gen.oneOf(
+    Gen.alphaChar.map(c => Array(c.toByte)),
+    Gen.oneOf("é", "€", "😀").map(_.getBytes("UTF-8")))
+  private val valid = Gen.oneOf(validPiece, bytes(' '), bytes(' ', ' '))
+  private val invalid = Gen.oneOf(
+    Gen.choose(0x80, 0xbf).flatMap(b => bytes(b)), // stray continuation byte
+    Gen.oneOf(0xc0, 0xc1, 0xf5, 0xf8, 0xfe, 0xff).flatMap(b => bytes(b)), // never a lead
+    Gen.choose(0xc2, 0xf4).flatMap(b => bytes(b, 'a'))) // truncated sequence
+  private val invalidText = for {
+    pre <- Gen.listOf(valid)
+    bad <- Gen.nonEmptyListOf(Gen.zip(invalid, Gen.listOf(valid)))
+  } yield UTF8String.fromBytes((pre ++ bad.flatMap { case (b, v) => b +: v }).flatten.toArray)
+  /** Whitespace-free tokens of the same pieces, each holding a bad shape,
+    * so the token laws below can be stated on malformed input too. */
+  private val invalidWords = Gen.chooseNum(1, 12).flatMap(n => Gen.listOfN(n, for {
+    pre <- Gen.listOf(validPiece)
+    bad <- invalid
+    post <- Gen.listOf(validPiece)
+  } yield (pre.flatten ++ bad ++ post.flatten).toArray))
+  private def joined(ws: Seq[Array[Byte]], sep: String, pre: String = "",
+    post: String = ""): UTF8String = {
+    val s = sep.getBytes("UTF-8")
+    UTF8String.fromBytes(pre.getBytes("UTF-8") ++
+      ws.reduceOption((a, b) => a ++ s ++ b).getOrElse(Array.emptyByteArray) ++
+      post.getBytes("UTF-8"))
+  }
+  private def hex(s: UTF8String) = s.getBytes.map(b => f"${b & 0xff}%02x").mkString(" ")
 
   test("simhash64 is invariant to whitespace layout") {
     forSamples(Gen.zip(words, Gen.chooseNum(1, 3))) { case (ws, pad) =>
@@ -59,6 +90,35 @@ class KernelPropertySpec extends AnyFunSuite {
         assert(got === ws.sliding(2).map(_.mkString(" ")).toSeq)
       }
     }
+  }
+
+  test("token laws hold on invalid UTF-8: simhash64 layout, shingle and bigram counts") {
+    forSamples(Gen.zip(invalidWords, Gen.chooseNum(1, 3)), 300) { case (ws, pad) =>
+      val text = joined(ws, " ")
+      val noisy = joined(ws, " " * pad, " " * pad, "\t\n")
+      assert(SignatureKernels.simhash64(text) === SignatureKernels.simhash64(noisy), hex(text))
+      assert(SignatureKernels.shingleHashes(text, 3).numElements() ===
+        math.max(ws.length - 2, 1), hex(text))
+      val arr = SignatureKernels.bigrams(text)
+      assert(arr.numElements() === ws.length - 1, hex(text))
+      val got = (0 until arr.numElements()).map(i => arr.getUTF8String(i).getBytes.toSeq)
+      assert(got === ws.sliding(2).collect { case Seq(a, b) => joined(Seq(a, b), " ").getBytes.toSeq }.toSeq,
+        hex(text))
+    }
+  }
+
+  test("graft_simhash64, graft_shingles and graft_bigrams: null in, null out") {
+    graft.functions.GraftFunctions.register(spark)
+    val fns = Seq("graft_simhash64", "graft_shingles", "graft_bigrams")
+    // a projection over a range runs the generated code; a local relation
+    // is folded by the interpreted path
+    val codegen = spark.range(2).selectExpr("if(id = 0, null, 'a b c') AS text")
+      .selectExpr(fns.map(f => s"$f(text) AS $f"): _*).collect()
+    val interpreted = spark.sql("SELECT " + fns.map(f =>
+      s"$f(CAST(NULL AS STRING)) AS $f").mkString(", ")).collect()
+    for (rows <- Seq(codegen.take(1), interpreted); f <- fns)
+      assert(rows.head.isNullAt(rows.head.fieldIndex(f)), f)
+    fns.foreach(f => assert(!codegen(1).isNullAt(codegen(1).fieldIndex(f)), f))
   }
 
   test("minhash estimates: identical docs agree on every component") {
@@ -394,21 +454,9 @@ class KernelPropertySpec extends AnyFunSuite {
         }
       }
     }
-    def bytes(bs: Int*): Gen[Array[Byte]] = Gen.const(bs.map(_.toByte).toArray)
-    val valid = Gen.oneOf(
-      Gen.alphaChar.map(c => Array(c.toByte)), bytes(' '), bytes(' ', ' '),
-      Gen.oneOf("é", "€", "😀").map(_.getBytes("UTF-8")))
-    val invalid = Gen.oneOf(
-      Gen.choose(0x80, 0xbf).flatMap(b => bytes(b)), // stray continuation byte
-      Gen.oneOf(0xc0, 0xc1, 0xf5, 0xf8, 0xfe, 0xff).flatMap(b => bytes(b)), // never a lead
-      Gen.choose(0xc2, 0xf4).flatMap(b => bytes(b, 'a'))) // truncated sequence
-    val text = for {
-      pre <- Gen.listOf(valid)
-      bad <- Gen.nonEmptyListOf(Gen.zip(invalid, Gen.listOf(valid)))
-    } yield UTF8String.fromBytes((pre ++ bad.flatMap { case (b, v) => b +: v }).flatten.toArray)
-    forSamples(text, 300) { t =>
+    forSamples(invalidText, 300) { t =>
       val got = SignatureKernels.shingleCharFolds(t, 3).toLongArray.toSeq
-      assert(got === chain(t, 3), t.getBytes.map(b => f"${b & 0xff}%02x").mkString(" "))
+      assert(got === chain(t, 3), hex(t))
     }
   }
 }
