@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.SparkContext
 import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
 
+import scala.jdk.CollectionConverters._
+
 /** Session-scoped memo registry for expensive persisted frames (simhash
   * pair graphs, component labels, PQ code tables): operators that share
   * an intermediate register it here so it is built and persisted ONCE
@@ -20,10 +22,11 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
   * call unpersist on) while the blocks lived on. The registry therefore
   * holds frames strongly and provides the two releases that actually
   * work:
-  *   - `invalidate(session)` unpersists and drops everything cached for
-  *     a session — services that retire sessions on a long-running
-  *     shared context MUST call it (it is the only mechanism that frees
-  *     the blocks, whatever this registry does);
+  *   - `invalidate(session)` drops everything cached for a session and
+  *     unpersists each frame no other live slot shares by plan —
+  *     services that retire sessions on a long-running shared context
+  *     MUST call it (it is the only mechanism that frees the blocks,
+  *     whatever this registry does);
   *   - one listener per SparkContext clears every slot attached to that
   *     context at application end;
   *   - a SESSION-COUNT BOUND (`spark.graft.persistcache.maxSessions`,
@@ -109,10 +112,17 @@ object PersistCache {
     if (slot != null) release(slot)
   }
 
+  /** Unpersists a dropped slot's frames. The CacheManager is shared by
+    * every session and unpersist matches by plan, so a frame whose plan
+    * another live slot also hands out stays cached.
+    */
   private def release(slot: Slot): Unit = {
     sessionIds.synchronized { sessionIds.remove(slot.session) }
+    val live = slots.values.asScala.flatMap(_.frames.values).map(_.queryExecution.analyzed)
     slot.frames.values.foreach { df =>
-      try df.unpersist(blocking = false) catch { case _: Throwable => () }
+      val plan = df.queryExecution.analyzed
+      if (!live.exists(_.sameResult(plan)))
+        try df.unpersist(blocking = false) catch { case _: Throwable => () }
     }
   }
 

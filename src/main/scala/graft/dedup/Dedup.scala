@@ -2,9 +2,12 @@ package graft.dedup
 
 import graft.{Q, Tables}
 import graft.functions.PortableHash
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.HashPartitioner
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, LongType}
+import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
+import org.apache.spark.storage.StorageLevel
 
 /** Deduplication operators for training-data pipelines (SURVEY.md §2c):
   * exact, MinHash+LSH, SimHash, n-gram Jaccard.
@@ -138,20 +141,17 @@ object Dedup {
           ON a.b = b.b AND a.bval = b.bval AND a.doc_id < b.doc_id)"""
   }
 
-  /** Non-recursive connected-components oracle: the same neighbor-min +
-    * pointer-jump label propagation the Spark loop runs, unrolled as
-    * `rounds` fixed step+jump CTE pairs over a `pairs(id1, id2)` CTE.
-    * `rounds` MUST equal the Spark loop's round cap
-    * (connectedComponents maxIters = 20): then the two are identical in
-    * every case — a converged graph sits at the fixed point on both
-    * sides (extra rounds are no-ops), and a pathological graph that has
-    * not converged by the cap lands in the same intermediate state after
-    * the same number of identical rounds. (Pointer jumping grows the
-    * converged diameter exponentially per round, so 20 rounds cover
-    * diameter ~2^20; sf0.01's worst component needs ~5.) Replaces a
-    * WITH RECURSIVE transitive closure that was quadratic in component
-    * size (~10 min of DuckDB at sf0.01 on a 623-node cluster; this form
-    * is ~40 joins over the edge list, <1 s).
+  /** Non-recursive connected-components oracle: neighbor-min +
+    * pointer-jump label propagation, unrolled as `rounds` fixed step+jump
+    * CTE pairs over a `pairs(id1, id2)` CTE. Its fixed point is the min-id
+    * labelling that `connectedComponents` computes exactly, whatever the
+    * diameter; extra rounds are no-ops there. Pointer jumping grows the
+    * converged diameter exponentially per round, so the default 20 rounds
+    * reach the fixed point for any diameter below ~2^20 (sf0.01's worst
+    * component needs ~5). Replaces a WITH RECURSIVE transitive closure
+    * that was quadratic in component size (~10 min of DuckDB at sf0.01
+    * on a 623-node cluster; this form is ~40 joins over the edge list,
+    * <1 s).
     */
   private def ccLabelsSql(rounds: Int = 20): String = {
     // AS MATERIALIZED is load-bearing: DuckDB inlines plain CTEs per
@@ -561,8 +561,9 @@ object Dedup {
   /** Connected-component labels (id → min reachable id) over the memoized
     * simhash pair graph, themselves memoized per (session, sf dir):
     * dedup_components groups them into duplicate clusters and dedup_apply
-    * turns them into a keep/drop corpus cut — the iterative CC loop runs
-    * once per dataset, not once per operator.
+    * turns them into a keep/drop corpus cut — the labels are computed once
+    * per dataset, not once per operator. At sf0.1 the build is one
+    * union-find task and three Spark jobs (`connectedComponents`).
     */
   def simhashLabels(t: Tables): DataFrame = {
     graft.functions.GraftFunctions.register(t.spark)
@@ -570,32 +571,128 @@ object Dedup {
       connectedComponents(simhashPairs(t).select(col("id1"), col("id2"))))
   }
 
-  /** Connected components over a near-dup pair list (small-star label
-    * propagation): every node adopts the minimum id reachable over `iters`
-    * rounds; for dedup-pair graphs (small diameter) a handful of rounds
-    * converges. Each iteration is one join + one aggregation — the
-    * standard Spark shape for dup-group clustering, no driver-side
-    * union-find.
+  /** Connected components over a near-dup pair list: every node of a pair
+    * gets the minimum id of its component, as `(id, label)` BIGINT
+    * columns. The pairs go into `loopParts` partitions (~500k directed
+    * edges a task, so a graph of up to ~250k pairs is one task) and
+    * `componentLabels` labels them exactly — no round cap, no change to
+    * the session's conf. The label rows persist as an RDD, filled inside
+    * the caller's first action (a cached frame would add a fill job); the
+    * context cleaner unpersists them once the frame is dropped and
+    * collected. One more job counts the edges.
     */
-  def connectedComponents(pairs: DataFrame, maxIters: Int = 20): DataFrame = {
-    import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    // undirected edge list, both directions
-    // No distinct and no intermediate persist: every producer hands this
-    // loop a deduped (id1 < id2) pair list (simhashPairs ends in
-    // .distinct()), so doubling directions cannot create duplicate
-    // edges — and even a duplicate-carrying caller only pads the
-    // neighbor-MIN aggregation, never changes it. The removed
-    // .distinct() was a full extra shuffle of the edge list; the
-    // removed extra persist held a second copy of the same edges.
-    val edges0 = pairs.select(col("id1").as("src"), col("id2").as("dst"))
-      .unionAll(pairs.select(col("id2").as("src"), col("id1").as("dst")))
+  def connectedComponents(pairs: DataFrame): DataFrame = {
     val spark = pairs.sparkSession
-    val nParts = loopParts(spark, 2L * pairs.count())
-    // persisted (and so planned) on the session's own conf, before the loop's
-    val edges = edges0.repartition(nParts, col("dst"))
-      .persist(MEMORY_AND_DISK)
-    withLoopConf(spark, nParts)(connectedComponentsLoop(edges, maxIters))
+    val edges = pairs.select(col("id1"), col("id2")).rdd.map(r => (r.getLong(0), r.getLong(1)))
+    val nParts = loopParts(spark, 2L * edges.count())
+    val labels = componentLabels(edges.coalesce(nParts, shuffle = edges.getNumPartitions < nParts))
+    spark.createDataFrame(
+      labels.map { case (id, label) => Row(id, label) }.persist(StorageLevel.MEMORY_AND_DISK),
+      StructType(Seq(StructField("id", LongType), StructField("label", LongType))))
   }
+
+  /** Min-id component labels of an undirected edge list, on the edges' own
+    * partitioning. Each partition runs `unionFindPartition`; with one
+    * partition its roots are the labels. With several, a node can get a
+    * different root in each partition it appears in: its smallest root is
+    * linked to each of the others, `starLabels` labels that residual graph
+    * over the roots, and a node's label is its smallest root's residual
+    * label (or that root, when the root is in no residual edge).
+    */
+  private[graft] def componentLabels(edges: RDD[(Long, Long)]): RDD[(Long, Long)] = {
+    val local = edges.mapPartitions(unionFindPartition)
+    if (edges.getNumPartitions <= 1) local
+    else {
+      val part = new HashPartitioner(
+        math.min(edges.getNumPartitions, edges.sparkContext.defaultParallelism))
+      val roots = local.groupByKey(part).mapValues(_.toArray.distinct)
+      val residual = roots.flatMap { case (_, rs) =>
+        val low = rs.min
+        rs.iterator.filter(_ != low).map(r => (r, low))
+      }
+      val resolved = starLabels(residual.distinct(part.numPartitions), part)
+      roots.map { case (id, rs) => (rs.min, id) }.leftOuterJoin(resolved, part)
+        .map { case (low, (id, label)) => (id, label.getOrElse(low)) }
+    }
+  }
+
+  /** Union-find over one partition's edges: `(id, root)` for every node
+    * they touch, root = the smallest id of its component within these
+    * edges. Ids map to indices in sorted order, so keeping the smaller
+    * index as root keeps the smaller id; finds compress their path.
+    */
+  private[graft] def unionFindPartition(edges: Iterator[(Long, Long)]): Iterator[(Long, Long)] = {
+    val ends = scala.collection.mutable.ArrayBuilder.make[Long]
+    edges.foreach { case (a, b) => ends += a; ends += b }
+    val pairs = ends.result()
+    val ids = pairs.clone()
+    java.util.Arrays.sort(ids)
+    var n = 0
+    ids.foreach { id => if (n == 0 || ids(n - 1) != id) { ids(n) = id; n += 1 } }
+    val parent = Array.range(0, n)
+    def find(i: Int): Int = {
+      var root = i
+      while (parent(root) != root) root = parent(root)
+      var j = i
+      while (parent(j) != root) { val up = parent(j); parent(j) = root; j = up }
+      root
+    }
+    def index(id: Long): Int = java.util.Arrays.binarySearch(ids, 0, n, id)
+    pairs.indices.by(2).foreach { k =>
+      val (a, b) = (find(index(pairs(k))), find(index(pairs(k + 1))))
+      if (a < b) parent(b) = a else if (b < a) parent(a) = b
+    }
+    Iterator.range(0, n).map(i => (ids(i), ids(find(i))))
+  }
+
+  /** Min-id labels of an undirected graph of `(larger, smaller)` id edges:
+    * `(node, label)` for every node. Alternates large-star and small-star
+    * (Kiveris et al., "Connected Components in MapReduce and Beyond",
+    * SoCC 2014), which never grow the edge set and reach the fixed point —
+    * every component a star around its minimum — in O(log² n) rounds.
+    * Each round's edges are persisted and lineage-truncated.
+    */
+  private def starLabels(edges: RDD[(Long, Long)], part: HashPartitioner): RDD[(Long, Long)] = {
+    def pinned(e: RDD[(Long, Long)]) = e.persist(StorageLevel.MEMORY_AND_DISK).localCheckpoint()
+    var e = pinned(edges)
+    var done = isStarForest(e, part)
+    while (!done) {
+      val next = pinned(smallStar(largeStar(e, part), part))
+      done = isStarForest(next, part)
+      e.unpersist(blocking = false)
+      e = next
+    }
+    e.union(e.values.distinct(part.numPartitions).map(c => (c, c)))
+  }
+
+  /** Large-star: every node links its strictly larger neighbours to the
+    * smallest id of its closed neighbourhood.
+    */
+  private def largeStar(e: RDD[(Long, Long)], part: HashPartitioner): RDD[(Long, Long)] = {
+    val nbrs = e.flatMap { case (a, b) => Iterator((a, b), (b, a)) }
+    val low = nbrs.reduceByKey(part, math.min(_, _))
+    nbrs.filter { case (u, v) => v > u }.join(low, part)
+      .map { case (u, (v, m)) => (v, math.min(u, m)) }
+      .distinct(part.numPartitions)
+  }
+
+  /** Small-star: every node links itself and its smaller neighbours to
+    * the smallest of them.
+    */
+  private def smallStar(e: RDD[(Long, Long)], part: HashPartitioner): RDD[(Long, Long)] = {
+    val low = e.reduceByKey(part, math.min(_, _))
+    e.join(low, part).values.filter { case (v, m) => v != m }
+      .union(low).distinct(part.numPartitions)
+  }
+
+  /** The fixed point of both stars: no node has two smaller neighbours,
+    * and no node has both a smaller and a larger one.
+    */
+  private def isStarForest(e: RDD[(Long, Long)], part: HashPartitioner): Boolean =
+    e.flatMap { case (big, small) => Iterator((big, (1, false)), (small, (0, true))) }
+      .reduceByKey(part, (x, y) => (x._1 + y._1, x._2 || y._2))
+      .filter { case (_, (smaller, larger)) => smaller > 1 || (smaller == 1 && larger) }
+      .count() == 0L
 
   /** Shuffle partitions for a loop over `edgeCount` directed edges: ~500k
     * edges a partition, not the session default, since tiny graphs on many
@@ -622,71 +719,11 @@ object Dedup {
     }
   }
 
-  private def connectedComponentsLoop(edges: DataFrame, maxIters: Int): DataFrame = {
-    val nodes = edges.select(col("src").as("id")).distinct()
-    // localCheckpoint each round: persists AND truncates the logical plan —
-    // without it the iterative lineage doubles per round (labels appears
-    // twice in each step) and planning itself OOMs after ~10 rounds.
-    // LAZY (r16): truncation happens at creation either way (the plan
-    // becomes a LogicalRDD immediately); the blocks fill during the
-    // round's convergence-sum action instead of a dedicated eager job —
-    // one blocking job round-trip saved per round.
-    var labels = nodes.withColumn("label", col("id")).localCheckpoint(false)
-    // Convergence metric: Σ label is strictly decreasing until fixed point
-    // (labels only ever drop to a smaller reachable id) — one cheap agg
-    // per round instead of a change-count join.
-    var prevSum = Long.MaxValue
-    var sum = labels.agg(org.apache.spark.sql.functions.sum(col("label"))).head().getLong(0)
-    var i = 0
-    // Two neighbor-min steps are fused per materialization: the dominant
-    // per-round cost is the blocking action + eager checkpoint, not the
-    // join itself, so halving the number of materializations ~halves wall
-    // time (dup-pair graphs converge in a handful of flooding steps).
-    // Two is also the MEASURED optimum (r15, sf0.1 pair graph): blocks
-    // of three step+jump pairs made each materialization's plan deep
-    // enough that per-block wall TRIPLED (9.1/3.6/3.0 s vs
-    // 2.8/1.5/0.9/0.9 s) — total 15.7 s vs 6.1 s — so the ~7 s
-    // _build_cc_labels floor is this shape's fixed scheduling/JIT cost,
-    // not a tunable; it amortizes at scale (rounds grow with log
-    // diameter: the measured sf0.1→sf1 slope is 2.6x on 10x rows).
-    // All loop joins are hinted SHUFFLE_HASH: the sides are tiny, so the
-    // default broadcast strategy would rebuild + ship a broadcast per
-    // join per round — each a blocking driver job that dominates the
-    // loop's wall time. Hash-shuffling a few MB is effectively free and
-    // reuses the edge partitioning.
-    def step(ls: DataFrame): DataFrame = {
-      val neighborMin = edges
-        .join(ls.withColumnRenamed("id", "dst").withColumnRenamed("label", "dst_label")
-          .hint("shuffle_hash"), "dst")
-        .groupBy(col("src").as("id"))
-        .agg(min(col("dst_label")).as("nbr_label"))
-      ls.join(neighborMin.hint("shuffle_hash"), Seq("id"), "left")
-        .select(col("id"), least(col("label"), coalesce(col("nbr_label"), col("label"))).as("label"))
-    }
-    // Pointer jumping (label ← label-of-label): halves path lengths per
-    // application, so propagate+jump blocks converge in O(log diameter)
-    // blocks instead of O(diameter) — the blocking per-block round-trip
-    // is the dominant cost, not the joins.
-    def jump(ls: DataFrame): DataFrame = {
-      val l2 = ls.select(col("id").as("jid"), col("label").as("jlabel"))
-      ls.join(l2.hint("shuffle_hash"), col("label") === col("jid"), "left")
-        .select(col("id"), coalesce(col("jlabel"), col("label")).as("label"))
-    }
-    while (sum < prevSum && i < maxIters) {
-      val next = jump(step(jump(step(labels)))).localCheckpoint(false)
-      prevSum = sum
-      sum = next.agg(org.apache.spark.sql.functions.sum(col("label"))).head().getLong(0)
-      labels = next
-      i += 2
-    }
-    labels
-  }
-
   // dedup_components — end-to-end duplicate-group clustering: near-dup
   // pairs (from the banded simhash candidates) → connected components →
   // canonical doc per group (minimum id). The oracle recomputes the same
-  // pairs in SQL and labels them with the same unrolled neighbor-min +
-  // pointer-jump propagation the Spark loop runs (ccLabelsSql);
+  // pairs in SQL and labels them with an unrolled neighbor-min +
+  // pointer-jump propagation that reaches the same fixed point (ccLabelsSql);
   // DedupSpec additionally asserts each planted twin lands in its
   // original's component.
   val components = Q(
@@ -1627,11 +1664,11 @@ object Dedup {
 
   /** Itemized Bench warm-up steps, one per memoized index structure, in
     * dependency order (cc_labels reuses the already-persisted sim_pairs,
-    * so its timing is the CC loop alone). Without an explicit build
-    * phase each index's cost lands on whichever sharing query runs
+    * so its timing is the component labelling alone). Without an explicit
+    * build phase each index's cost lands on whichever sharing query runs
     * first; without itemization the phase is one opaque number — round
     * 4's `_build_dedup_graph` doubled to 36.6 s with no way to tell the
-    * pair graph from the CC loop from the round's new idf family.
+    * pair graph from the labelling from the round's new idf family.
     */
   def buildSteps(t: Tables): Seq[(String, () => Unit)] = Seq(
     "sim_pairs" -> (() => { simhashPairs(t).count(); () }),
@@ -1883,8 +1920,7 @@ object Dedup {
   // pure function of the pair graph that the oracle replays verbatim;
   // equal trailing rows certify the fixpoint was reached inside the
   // budget. Each round is one degree aggregation plus one two-sided
-  // semi-join — the same shuffle shape as a connectedComponents
-  // iteration, state is node-sized, candidate volume edge-sized; at
+  // semi-join — state is node-sized, candidate volume edge-sized; at
   // 100 TB the serving variant runs the identical loop with an early
   // exit on a 1-row convergence count, and peeling only ever SHRINKS
   // the edge set, so round cost is monotone decreasing.
@@ -1919,12 +1955,12 @@ object Dedup {
       """
     }
   ) { t =>
-    // The same iterative-loop discipline connectedComponents earned the
-    // hard way: localCheckpoint each round (lazy since r16 — persists AND truncates
-    // lineage — without it round r's logical plan embeds round r−1
-    // THREE times and planning alone goes exponential), AQE off and
-    // shuffle partitions pinned to the graph size for the loop only,
-    // loop joins hinted SHUFFLE_HASH so no per-round broadcast job.
+    // Iterative-loop discipline: localCheckpoint each round (lazy since
+    // r16 — persists AND truncates lineage — without it round r's logical
+    // plan embeds round r−1 THREE times and planning alone goes
+    // exponential), AQE off and shuffle partitions pinned to the graph
+    // size for the loop only, loop joins hinted SHUFFLE_HASH so no
+    // per-round broadcast job.
     val spark = t.spark
     import spark.implicits._
     val pairs = simhashPairs(t).select(col("id1"), col("id2"))

@@ -3,7 +3,9 @@ package graft.tools
 import java.nio.file.{Files, Paths, StandardOpenOption}
 
 import graft.{GraftSession, SparkEntry, Tables}
+import org.apache.spark.SparkContext
 import org.apache.spark.graft.ListenerBusAccess
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.{FormattedMode, QueryExecution}
 import org.apache.spark.sql.util.QueryExecutionListener
@@ -28,7 +30,7 @@ import org.apache.spark.sql.util.QueryExecutionListener
   *   These are the AQE final plans (coalesced reads, runtime join
   *   rewrites, reused exchanges), which a static `plan` cannot show.
   * - `build`: time the named build steps (`SparkEntry.builds` names),
-  *   or all of them in registry order.
+  *   or all of them in registry order, with the Spark jobs each started.
   *
   * `plan` and `executed` append to `out` instead of printing when given.
   */
@@ -115,7 +117,34 @@ object Probe {
     val steps =
       if (names.isEmpty) SparkEntry.builds(t)
       else names.map(n => n -> SparkEntry.buildStep(t, n))
-    steps.map { case (name, run) => f"$name%-12s ${seconds(run())}%8.2f s\n" }.mkString
+    steps.map { case (name, run) =>
+      var secs = 0.0
+      val jobs = jobsOf(t.spark.sparkContext) { secs = seconds(run()) }
+      f"$name%-12s $secs%8.2f s $jobs%4d jobs\n"
+    }.mkString
+  }
+
+  /** Spark jobs `f` starts, counted by a listener. Only jobs of a job
+    * group set for `f` on this thread count, so work elsewhere in the JVM
+    * does not; the thread's own job group is cleared after.
+    */
+  def jobsOf(sc: SparkContext)(f: => Unit): Int = {
+    val group = s"probe-job-count-${java.util.UUID.randomUUID()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "job count")
+    try f
+    finally {
+      sc.clearJobGroup()
+      ListenerBusAccess.waitUntilEmpty(sc, 10000L)
+      sc.removeSparkListener(listener)
+    }
+    jobs.get
   }
 
   private def emit(text: String, out: Option[String]): String = out match {

@@ -70,6 +70,16 @@ class PersistCacheSpec extends SparkSpec {
     } finally Seq(s1, s2, s3).foreach(PersistCache.invalidate)
   }
 
+  test("invalidating one session keeps the frame another session shares by plan") {
+    val shared = graft.dedup.Dedup.idfBanded(sf0001)
+    shared.count()
+    val other = spark.newSession()
+    graft.dedup.Dedup.idfBanded(Tables(other, sf0001.dir)).count()
+    PersistCache.invalidate(other)
+    assert(shared.storageLevel !== org.apache.spark.storage.StorageLevel.NONE,
+      "the shared session's idf frame was uncached")
+  }
+
   test("Pin.pinned materializes ONCE, serves consumers from cache, keeps lineage") {
     val acc = spark.sparkContext.longAccumulator("pin_builds")
     val rdd = spark.sparkContext.parallelize(1 to 100, 4)

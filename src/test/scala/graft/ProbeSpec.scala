@@ -42,6 +42,21 @@ class ProbeSpec extends SparkSpec {
     assert(!out.contains("(no plan captured)"), out)
   }
 
+  test("build prints each step's seconds and Spark jobs") {
+    // a fresh session, so the steps build rather than hit the shared memo
+    val s = spark.newSession()
+    try {
+      val out = Probe.run(s, Array("build", sf, "sim_pairs,cc_labels"))
+      val line = """(\w+) +\d+\.\d\d s +(\d+) jobs""".r
+      val steps = out.linesIterator.map {
+        case line(name, jobs) => name -> jobs.toInt
+        case other => fail(s"unexpected line: $other")
+      }.toSeq
+      assert(steps.map(_._1) === Seq("sim_pairs", "cc_labels"), out)
+      assert(steps.forall(_._2 > 0), out)
+    } finally PersistCache.invalidate(s)
+  }
+
   test("build with an unknown step fails listing the valid names") {
     val e = intercept[IllegalArgumentException] {
       Probe.run(spark, Array("build", sf, "emb_lsh,no_such_step"))

@@ -14,28 +14,10 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
-  /** Spark jobs `f` starts, counted by a listener. Only jobs of a job
-    * group set for `f` count, so work elsewhere in the JVM does not.
+  /** Spark jobs `f` starts (`Probe.jobsOf`: only jobs of a job group set
+    * for `f` count, so work elsewhere in the JVM does not).
     */
-  def jobsOf(f: => Unit): Int = {
-    val sc = spark.sparkContext
-    val group = s"spec-job-count-${java.util.UUID.randomUUID()}"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          jobs.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, "spec job count")
-    try f
-    finally {
-      sc.clearJobGroup()
-      org.apache.spark.graft.ListenerBusAccess.waitUntilEmpty(sc, 10000L)
-      sc.removeSparkListener(listener)
-    }
-    jobs.get
-  }
+  def jobsOf(f: => Unit): Int = graft.tools.Probe.jobsOf(spark.sparkContext)(f)
 
   lazy val sf0001: Tables = Tables(spark, "/root/testdata/sf0.001")
   lazy val sf001: Tables = Tables(spark, "/root/testdata/sf0.01")
